@@ -9,12 +9,15 @@ compare hashes values after sorting columns by name.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ai_pdf_extraction_spark.persist import persist, release
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -418,32 +421,47 @@ def q22_minhash_lsh_pairs(spark, sf_dir):
     )
 
 
+def _contract_docs_digest(extra: str = "") -> tuple[str, str, str]:
+    """``(documents.parquet, sf tag, cache digest)`` of the contract
+    documents table the golden oracles (q23, q68, q69) are built from.
+
+    The sf dir comes from ``SPARK_GRAFT_CONTRACT_SF`` (set by
+    ``tools/check_contract.py``) and defaults to the driver's sf0.01.
+    The digest is over the parquet FOOTER's bytes — schema, row count,
+    per-chunk sizes and statistics — plus ``extra`` (the model or
+    merge-table digest). It is keyed by content, so a regenerated
+    table never compares against a stale golden, while a copy of the
+    same table (new mtimes) resolves to the same golden path."""
+    import hashlib
+
+    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
+    src = os.path.join(sf_dir, "documents.parquet")
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    if not os.path.exists(src):
+        return src, tag, "missing"
+    with open(src, "rb") as fh:
+        # file tail: <footer><4-byte little-endian footer length>PAR1
+        fh.seek(-8, os.SEEK_END)
+        footer_len = int.from_bytes(fh.read(4), "little")
+        fh.seek(-8 - footer_len, os.SEEK_END)
+        footer = fh.read(footer_len)
+    digest = hashlib.md5(footer + extra.encode()).hexdigest()[:12]
+    return src, tag, digest
+
+
 def _q23_golden_path() -> str:
     """Golden parquet for the 64-bit SimHash oracle: DuckDB has no
     xxhash64, so the oracle is an independent pure-Python XXH64 +
     SimHash computed single-process from the contract documents table
-    (``oracle/xxh64.py``), pinned against Spark in pytest.
-
-    The sf dir comes from ``SPARK_GRAFT_CONTRACT_SF`` (set by
-    ``tools/check_contract.py``) and defaults to the driver's sf0.01.
-    The cache key covers the twin's semantics version AND the source
-    table's (mtime_ns, size) digest — a regenerated documents.parquet
-    must never be compared against a stale golden."""
-    import hashlib
-
+    (``oracle/xxh64.py``), pinned against Spark in pytest. The cache
+    key covers the twin's semantics version AND the source table's
+    content digest (``_contract_docs_digest``)."""
     from ai_pdf_extraction_spark.oracle.xxh64 import (
         TWIN_VERSION,
         write_simhash_golden,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    if os.path.exists(src):
-        st = os.stat(src)
-        digest = hashlib.md5(f"{st.st_mtime_ns}|{st.st_size}".encode()).hexdigest()[:12]
-    else:
-        digest = "missing"
+    src, tag, digest = _contract_docs_digest()
     out = f"/tmp/spark_graft_simhash64_golden_t{TWIN_VERSION}_{tag}_{digest}.parquet"
     if not os.path.exists(out) and os.path.exists(src):
         write_simhash_golden(src, out)
@@ -2350,11 +2368,6 @@ def q93_sitemap_recrawl(spark, sf_dir):
     return sitemap_recrawl_delta(parse_sitemap_entries(sitemaps), crawled)
 
 
-# q90's persisted parsed-canon slot (feeds the semi-probe build side
-# AND the flag join)
-_Q90_CANON_CACHE: list = []
-
-
 def q90_sitemap_discovery(spark, sf_dir):
     """Sitemap-driven url discovery — the discovery half of the crawl
     stack composed with the seen-set probe: per-host sitemap XML
@@ -2362,7 +2375,6 @@ def q90_sitemap_discovery(spark, sf_dir):
     padded <loc> whitespace) is parsed, canonicalized, and flagged
     against the already-crawled set via the q80 broadcast semi — the
     seen side is scanned, never shuffled."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.urls import (
         parse_sitemaps,
         with_canonical_url,
@@ -2397,8 +2409,8 @@ def q90_sitemap_discovery(spark, sf_dir):
         ),
         "sitemap_xml",
     )
-    canon = _persist_latest(
-        _Q90_CANON_CACHE,
+    # the parsed canon feeds the semi-probe build side AND the flag join
+    canon = persist(
         with_canonical_url(parse_sitemaps(sitemaps), "url")
         .select("host", "canon_url")
         .distinct(),
@@ -2427,11 +2439,6 @@ def q90_sitemap_discovery(spark, sf_dir):
     )
 
 
-# q88's persisted-frontier slot (the operators' _persist_latest
-# lifecycle: the next call evicts the previous plan)
-_Q88_FR_CACHE: list = []
-
-
 def q88_frontier_politeness(spark, sf_dir):
     """The full politeness-gated frontier — the crawl-side capstone
     (the curated-corpus discipline applied to scheduling): q80's
@@ -2449,15 +2456,11 @@ def q88_frontier_politeness(spark, sf_dir):
         url_prefilter,
     )
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     # the frontier fans out into four legs (prefilter flags, robots
     # narrow + join-back, host-cap projection): persist it or every
     # leg re-executes the q80 plan — whose synthesized canon
     # expressions are codegen-heavy — once per reference
-    fr = _persist_latest(
-        _Q88_FR_CACHE, q80_url_frontier_delta(spark, sf_dir)
-    )
+    fr = persist(q80_url_frontier_delta(spark, sf_dir))
     pf = url_prefilter(
         fr,
         url_col="canon_url",
@@ -2873,26 +2876,15 @@ def _q68_golden_path() -> str:
     different strategy from the kernel's all-occurrences pass) run
     single-process over the contract documents table. Cache key covers
     kernel version, twin version, the merge-table digest, AND the
-    source table's (mtime_ns, size) digest — a retrained table or
-    regenerated parquet can never compare against a stale golden."""
-    import hashlib
-
+    source table's content digest — a retrained table or regenerated
+    parquet can never compare against a stale golden."""
     from ai_pdf_extraction_spark.kernels.bpe import BPE_VERSION, merges_digest
     from ai_pdf_extraction_spark.oracle.bpe_naive import (
         TWIN_VERSION,
         write_bpe_golden,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    if os.path.exists(src):
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{st.st_mtime_ns}|{st.st_size}|{merges_digest()}".encode()
-        ).hexdigest()[:12]
-    else:
-        digest = "missing"
+    src, tag, digest = _contract_docs_digest(merges_digest())
     out = (
         f"/tmp/spark_graft_bpe_golden_k{BPE_VERSION}_t{TWIN_VERSION}"
         f"_{tag}_{digest}.parquet"
@@ -2954,25 +2946,14 @@ def _q69_golden_path() -> str:
     twin (``oracle/lid_naive.py`` — re-derives hashing and argmax from
     the model-file contract) over the q69 sample substitution. Cache
     key covers kernel + twin versions, the model digest, and the
-    source table digest."""
-    import hashlib
-
+    source table's content digest."""
     from ai_pdf_extraction_spark.kernels.lid import LID_VERSION, model_digest
     from ai_pdf_extraction_spark.oracle.lid_naive import (
         TWIN_VERSION,
         write_lid_golden,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
-    src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    if os.path.exists(src):
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{st.st_mtime_ns}|{st.st_size}|{model_digest()}".encode()
-        ).hexdigest()[:12]
-    else:
-        digest = "missing"
+    src, tag, digest = _contract_docs_digest(model_digest())
     out = (
         f"/tmp/spark_graft_lid_golden_k{LID_VERSION}_t{TWIN_VERSION}"
         f"_{tag}_{digest}.parquet"
@@ -3466,12 +3447,6 @@ def q99_outlink_extraction(spark, sf_dir):
     return extract_outlinks(_q99_pages(spark, sf_dir))
 
 
-# q100's persisted-edges slot: anchor_stats fans the extraction plan
-# out into two aggregation legs — unpersisted, each leg would splice
-# and re-run the full outlink expression tree (the q88 lesson)
-_Q100_EDGES_CACHE: list = []
-
-
 def q100_anchor_stats(spark, sf_dir):
     """Inbound anchor-text aggregation per link target: total inbound
     links, distinct linking pages, and the most frequent anchor text
@@ -3479,12 +3454,11 @@ def q100_anchor_stats(spark, sf_dir):
     min(struct(-n, anchor)), no window). The abs-link leg fans 500
     docs onto 211 targets and its 'Read k' anchors tie within a
     target, exercising the tie rule at sf0.01."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.links import anchor_stats
 
-    edges = _persist_latest(
-        _Q100_EDGES_CACHE, q99_outlink_extraction(spark, sf_dir)
-    )
+    # anchor_stats fans the extraction out into two aggregation legs —
+    # unpersisted, each leg would re-run the full outlink expression tree
+    edges = persist(q99_outlink_extraction(spark, sf_dir))
     return anchor_stats(edges)
 
 
@@ -4236,7 +4210,6 @@ def q117_trap_filtered_frontier(spark, sf_dir):
     pages pass. The frontier is the same url generator shifted by one
     (event_id+1), so trap urls genuinely recur without being
     byte-identical to the mined log."""
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
     from ai_pdf_extraction_spark.operators.urls import (
         trap_filter,
         url_templates,
@@ -4274,8 +4247,8 @@ def q117_trap_filtered_frontier(spark, sf_dir):
             )
         )
 
-    traps = _persist_latest(
-        _Q117_TRAPS_CACHE,
+    # built once for the broadcast probe
+    traps = persist(
         url_templates(e.select(gen(0).alias("url")), min_urls=50),
     )
     frontier = (
@@ -4286,12 +4259,20 @@ def q117_trap_filtered_frontier(spark, sf_dir):
     return trap_filter(frontier, traps)
 
 
-# q117's persisted trap-relation slot (broadcast probe built once)
-_Q117_TRAPS_CACHE: list = []
+def _query_scope(fn: Callable[[SparkSession, str], DataFrame]):
+    """Release the previous query's persists before building this one,
+    so no relation it cached is substituted into this plan."""
+
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release()
+        return fn(spark, sf_dir)
+
+    return build
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    fns = {
         "q01_pricing_summary": q01_pricing_summary,
         "q02_filtered_revenue": q02_filtered_revenue,
         "q03_region_nation_rollup": q03_region_nation_rollup,
@@ -4410,6 +4391,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q116_error_backoff_caps": q116_error_backoff_caps,
         "q117_trap_filtered_frontier": q117_trap_filtered_frontier,
     }
+    return {name: _query_scope(fn) for name, fn in fns.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -5607,7 +5589,6 @@ edges as (select src, dst, count(*)::bigint as weight from hl
         + _q84_pagerank_ctes(3, graph_ctes=graph)
         + '\nselect host, r as "rank" from r3'
     )
-
 
 
 def _q111_oracle_sql() -> str:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
+from ai_pdf_extraction_spark.persist import persist
 
 # Shingles appearing in more docs than this are dropped before any
 # join — a handful of ubiquitous (stopword-ish) shingles would
@@ -87,67 +88,6 @@ def _guard_all_pairs(
         )
     return n
 
-# Most-recently persisted shingle relations. Plan-building functions
-# persist the shingle explode because it feeds several consumers, but
-# they return unmaterialized plans, so they can't unpersist their own
-# cache. Instead each new persist evicts the previous one — queries in
-# a long-lived session run sequentially, so by the time a new plan is
-# built the old result has been materialized. Worst case (two plans
-# built before either runs) is a recompute, never a wrong result.
-_SHINGLE_CACHE: list[DataFrame] = []
-
-# raw (pre-cap) shingle slot — _df_capped's input feeds both anti-join
-# sides; separate from _SHINGLE_CACHE so persisting the capped result
-# doesn't evict the raw relation mid-materialization
-_RAW_SHINGLE_CACHE: list[DataFrame] = []
-
-# per-doc sorted shingle-array slot for the prefix-filtered all-pairs
-# plan: the relation feeds three consumers (prefix explode + both
-# verify sides), so it gets its own persist slot
-_PAIR_ARRAYS_CACHE: list[DataFrame] = []
-
-
-def _persist_latest(cache: list, df: DataFrame) -> DataFrame:
-    """Most-recently-persisted slot: evicts the cache's previous entry
-    (correctness unaffected — an evicted plan just recomputes)."""
-    for old in cache:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    cache.clear()
-    df = df.persist()
-    cache.append(df)
-    return df
-
-
-def _persist_shingles(sh: DataFrame) -> DataFrame:
-    return _persist_latest(_SHINGLE_CACHE, sh)
-
-
-# granule_dedup's projected granule arrays get their OWN slot so a
-# composed plan (curate v2: LSH near-dup ∧ granule stats) keeps both
-# persists live instead of evicting the shingle relation
-_GRANULE_CACHE: list[DataFrame] = []
-
-
-# Same lifecycle pattern for neardup_clusters' final label frontier:
-# the returned plan references the persisted labels, so the call can't
-# unpersist its own cache — the next call evicts the previous one.
-_LABEL_CACHE: list[DataFrame] = []
-
-
-def _register_labels(labels: DataFrame) -> DataFrame:
-    # input arrives already persisted — evict-and-track only
-    for old in _LABEL_CACHE:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _LABEL_CACHE.clear()
-    _LABEL_CACHE.append(labels)
-    return labels
-
 
 def _df_capped(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     """Drop shingles whose document frequency exceeds the cap. ``sh``
@@ -166,7 +106,7 @@ def _df_capped(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     MEMORY_AND_DISK spill story as every other shingle persist."""
     if max_shingle_df is None:
         return sh
-    sh = _persist_latest(_RAW_SHINGLE_CACHE, sh)
+    sh = persist(sh)
     return sh.join(hot_shingle_set(sh, max_shingle_df), "shingle", "left_anti")
 
 
@@ -289,8 +229,7 @@ def granule_dedup(
     persisted across its two consumers (the stats leg and the winners
     leg) so the text scan + split runs once."""
     docs = _ensure_parallel(docs, id_col)
-    base = _persist_latest(
-        _GRANULE_CACHE,
+    base = persist(
         docs.select(
             F.col(id_col),
             F.filter(
@@ -488,12 +427,17 @@ def ngram_jaccard_pairs(
         n_docs = _guard_all_pairs(
             docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
         )
+        if n_docs is None and prefix_min_docs > 0:
+            # max_docs=None skips the guard probe, but the plan choice
+            # still needs the doc count — without it the prefix plan
+            # would never activate on the corpora that need it most
+            n_docs = docs.limit(prefix_min_docs + 1).count()
     if _shingles is not None:
         sh = _shingles
     else:
         # The explode feeds three consumers (sizes + both join sides):
         # materialize it once instead of re-running split/explode per use.
-        sh = _persist_shingles(
+        sh = persist(
             _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
         )
     if _candidates is not None:
@@ -547,8 +491,7 @@ def ngram_jaccard_pairs(
         # slice length.
         t_eff = max(threshold - 1e-4, 0.0)
         dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        arrays = _persist_latest(
-            _PAIR_ARRAYS_CACHE,
+        arrays = persist(
             sh.join(dfc, "shingle")
             .groupBy(id_col)
             .agg(
@@ -696,7 +639,7 @@ def minhash_lsh_pairs(
     and verification all use one DF-capped shingle universe so the
     verified Jaccard matches ``ngram_jaccard_pairs`` exactly.
     """
-    sh = _persist_shingles(
+    sh = persist(
         _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
     )
     sig = minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
@@ -794,7 +737,7 @@ def neardup_clusters(
             "labels would be silently non-minimal otherwise"
         )
     edges.unpersist()
-    _register_labels(labels)
+    persist(labels)
     # cluster sizes via partial-aggregating groupBy + join back — the
     # exact_dedup rule: a giant near-dup cluster (boilerplate family at
     # crawl scale) is a hot label, a window over it funnels one task

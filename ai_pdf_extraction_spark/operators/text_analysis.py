@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.persist import persist
+
 
 def _occurrences(text: Column, marker: str) -> Column:
     """Non-overlapping occurrence count via the replace trick —
@@ -219,17 +221,6 @@ LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
 MARKER_WEIGHT = 3
 
 
-def trigram_scores(col: Column | str = "text") -> dict[str, Column]:
-    """Per-language trigram occurrence counts over the padded lowered
-    text — identical arithmetic in DuckDB."""
-    c = F.col(col) if isinstance(col, str) else col
-    padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-    return {
-        lang: sum(_occurrences(padded, t) for t in tris).alias(f"tri_{lang}")
-        for lang, tris in LANG_TRIGRAMS.items()
-    }
-
-
 def lang_detect_trigram(col: Column | str = "text") -> Column:
     """Wide language ID with trigram evidence (round-4 verdict item 7):
     script-charset first (same ranges/threshold as :func:`lang_detect`),
@@ -258,13 +249,6 @@ def lang_detect_trigram(col: Column | str = "text") -> Column:
             counts[lang] * SCRIPT_SHARE_DENOM >= n, F.lit(lang)
         ).otherwise(expr)
     return expr
-
-
-def punct_count(col: Column | str = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
-    ).cast("long")
 
 
 def quality_score(col: Column | str = "text") -> Column:
@@ -579,11 +563,6 @@ def with_text_analysis(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-# distinctive_terms' persisted per-(doc, term) relation (the
-# dedup._persist_latest lifecycle)
-_TERM_CACHE: list = []
-
-
 def distinctive_terms(
     docs: DataFrame,
     k: int = 5,
@@ -614,16 +593,13 @@ def distinctive_terms(
     key, no funnel)."""
     from pyspark.sql import Window
 
-    from ai_pdf_extraction_spark.operators.dedup import _persist_latest
-
     tok = docs.select(
         F.col(id_col),
         F.explode(
             F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")
         ).alias("term"),
     ).filter(F.col("term") != "")
-    tf = _persist_latest(
-        _TERM_CACHE,
+    tf = persist(
         tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -636,9 +612,6 @@ def distinctive_terms(
         .filter(F.col("pick_rank") <= k)
         .select(id_col, "term", "tf", "df", "pick_rank")
     )
-
-
-_BP_LINE_CACHE: list = []
 
 
 def boilerplate_line_removal(
@@ -675,15 +648,11 @@ def boilerplate_line_removal(
     corpus-cardinality key, no funnel, no window. The sorted array is
     projected in its OWN step before the element-wise lambda (the
     HOF no-CSE rule)."""
-    from ai_pdf_extraction_spark.operators.dedup import (
-        _ensure_parallel,
-        _persist_latest,
-    )
+    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
 
     docs = _ensure_parallel(docs, id_col)
     stripped = F.regexp_replace("line", r"^[ \t\r]+|[ \t\r]+$", "")
-    lines = _persist_latest(
-        _BP_LINE_CACHE,
+    lines = persist(
         docs.select(
             F.col(id_col),
             F.col(group_col),
@@ -720,9 +689,6 @@ def boilerplate_line_removal(
     )
 
 
-_HOST_Q_CACHE: list = []
-
-
 def host_quality_filter(
     docs: DataFrame,
     min_host_quality_scaled: int = 5500,
@@ -748,14 +714,10 @@ def host_quality_filter(
     the scan; the per-host relation is a partial-agg groupBy at HOST
     cardinality and joins back broadcast — the corpus is scanned
     once more but never shuffled."""
-    from ai_pdf_extraction_spark.operators.dedup import (
-        _ensure_parallel,
-        _persist_latest,
-    )
+    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
 
     docs = _ensure_parallel(docs, id_col)
-    scored = _persist_latest(
-        _HOST_Q_CACHE,
+    scored = persist(
         docs.select(
             F.col(id_col),
             F.col(group_col),

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_pdf_extraction_spark.operators.dedup import (
-    _persist_latest,
     contamination_flags,
     exact_dedup,
     granule_dedup,
@@ -38,12 +37,7 @@ from ai_pdf_extraction_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from ai_pdf_extraction_spark.operators.text_analysis import quality_score, token_count
-
-# The capstones' shared narrow doc projection gets its own
-# most-recently-persisted slot (same lifecycle as dedup's shingle and
-# granule slots — see operators/dedup.py:_SHINGLE_CACHE) so persisting
-# it never evicts the shingle or granule relations it composes with.
-_DOCS_CACHE: list[DataFrame] = []
+from ai_pdf_extraction_spark.persist import persist
 
 
 def _narrow_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -76,7 +70,7 @@ def _narrow_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     parts = docs.rdd.getNumPartitions()
     if parts < target * 4:
         narrow = narrow.repartition(max(target * 2, parts), F.col(id_col))
-    return mark_parallel_balanced(_persist_latest(_DOCS_CACHE, narrow))
+    return mark_parallel_balanced(persist(narrow))
 
 
 def curated_corpus(
@@ -96,7 +90,7 @@ def curated_corpus(
 
     ``_narrow`` hands in the already-persisted projection when this
     plan runs as a leg of ``curated_corpus_v2`` — the composed capstone
-    then owns the single cache slot for all of its legs."""
+    then persists one projection for all of its legs."""
     narrow = _narrow if _narrow is not None else _narrow_docs(docs, id_col, text_col)
     scored = narrow.select(
         id_col,
@@ -142,9 +136,9 @@ def curated_corpus_v2(
     (the source table is scanned once; plan-asserted): the
     contamination shingle set broadcasts, granule winners partial-
     aggregate, the LSH loser set anti-joins — and the docs, shingle and
-    granule persists live in separate cache slots so none evicts
-    another. Output: (id, lang, quality, n_tokens, n_granules,
-    n_kept)."""
+    granule persists all stay cached until the query's scope is
+    released (``persist.release``). Output: (id, lang, quality,
+    n_tokens, n_granules, n_kept)."""
     narrow = _narrow if _narrow is not None else _narrow_docs(docs, id_col, text_col)
     base = curated_corpus(
         docs, id_col=id_col, text_col=text_col, _narrow=narrow, **knobs
@@ -205,9 +199,6 @@ def curated_corpus_v3(
     return base.join(emb_losers, id_col, "left_anti")
 
 
-_V4_BASE_CACHE: list[DataFrame] = []
-
-
 def curated_corpus_v4(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -239,8 +230,7 @@ def curated_corpus_v4(
     narrow = _narrow if _narrow is not None else _narrow_docs(docs, id_col, text_col)
     # v3 feeds BOTH the survivor semi-join and the final join — persist
     # or the whole five-leg capstone plan executes twice
-    base = _persist_latest(
-        _V4_BASE_CACHE,
+    base = persist(
         curated_corpus_v3(
             docs, benchmark, emb, id_col=id_col, text_col=text_col,
             _narrow=narrow, **knobs,

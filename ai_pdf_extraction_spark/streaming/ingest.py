@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ai_pdf_extraction_spark.persist import release
 from ai_pdf_extraction_spark.plans.pipeline import project_extraction
 
 PAGES_SCHEMA = StructType(
@@ -51,6 +52,20 @@ def extraction_stream(
         .parquet(input_dir)
     )
     return project_extraction(pages, run_id, n_buckets)
+
+
+def _released(body):
+    """A foreachBatch body that releases what its operators persisted
+    (``persist.release``) when it ends, so persists do not pile up
+    across micro-batches."""
+
+    def run(batch_df: DataFrame, epoch: int) -> None:
+        try:
+            body(batch_df, epoch)
+        finally:
+            release()
+
+    return run
 
 
 def run_available_now(
@@ -283,7 +298,7 @@ def run_frontier_stream(
             to_crawl.unpersist()
 
     q = (
-        stream.writeStream.foreachBatch(_probe_and_append)
+        stream.writeStream.foreachBatch(_released(_probe_and_append))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -373,7 +388,7 @@ def run_dedup_ingest_stream(
             accepted.unpersist()
 
     q = (
-        stream.writeStream.foreachBatch(_dedup_and_append)
+        stream.writeStream.foreachBatch(_released(_dedup_and_append))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -22,6 +22,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_persists():
+    """Each test is one persist scope: unpersist what its plans cached."""
+    from ai_pdf_extraction_spark.persist import release
+
+    yield
+    release()
+
+
 @pytest.fixture(scope="session")
 def pages_rows():
     from ai_pdf_extraction_spark.corpus.generate import generate_pages

@@ -765,6 +765,43 @@ def test_streaming_frontier_loop(spark, tmp_path):
     assert load_seen_set(spark, seen_dir).count() == n_seen
 
 
+def test_streaming_frontier_releases_persists_per_batch(spark, tmp_path):
+    """The operators inside a micro-batch (url_frontier_delta,
+    frontier_host_cap) persist relations their plans read; each
+    foreachBatch body releases them, so none outlive the stream."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ai_pdf_extraction_spark.sources.seen_urls import write_seen_set
+    from ai_pdf_extraction_spark.streaming.ingest import run_frontier_stream
+
+    in_dir = str(tmp_path / "urls_in")
+    seen_dir = str(tmp_path / "seen")
+    out_dir = str(tmp_path / "frontier_out")
+    os.makedirs(in_dir)
+    write_seen_set(
+        spark.createDataFrame([("http://old.com/a",)], "canon_url string"),
+        seen_dir,
+    )
+    # 10 flat files at maxFilesPerTrigger=8: two micro-batches
+    for f in range(10):
+        pq.write_table(
+            pa.table({"event_id": pa.array([f * 10, f * 10 + 1], pa.int64()),
+                      "url": pa.array([f"http://h{f % 3}.com/p/{f}/{i}"
+                                       for i in range(2)], pa.string())}),
+            os.path.join(in_dir, f"b{f:02d}.parquet"),
+        )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    run_frontier_stream(spark, in_dir, seen_dir, out_dir,
+                        str(tmp_path / "ckpt"), timeout_sec=120, per_host=2)
+    epochs = [d for d in os.listdir(out_dir) if d.startswith("batch=")]
+    assert len(epochs) >= 2
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_streaming_dedup_ingest_loop(spark, tmp_path):
     """Ingest-time dedup across micro-batches: batch N's accepted docs
     reject their duplicates arriving in batch N+1; within-batch dups

@@ -150,9 +150,11 @@ def test_ngram_jaccard_df_cap_drops_hot_shingle(spark):
 
 
 @pytest.mark.parametrize(
-    "prefix_min_docs", [10**9, 0], ids=["selfjoin", "prefix"]
+    "prefix_min_docs, max_docs, prefix_plan",
+    [(10**9, 100_000, False), (0, 100_000, True), (48, None, True), (49, None, False)],
+    ids=["selfjoin", "prefix", "prefix-unguarded", "selfjoin-unguarded"],
 )
-def test_ngram_allpairs_matches_python_twin(spark, prefix_min_docs):
+def test_ngram_allpairs_matches_python_twin(spark, prefix_min_docs, max_docs, prefix_plan):
     """The all-pairs baseline must reproduce the naive python Jaccard
     EXACTLY — counts, the round-4 half-away rule, and the threshold
     boundary — on a 48-doc sliding-window corpus dense in partial
@@ -161,7 +163,9 @@ def test_ngram_allpairs_matches_python_twin(spark, prefix_min_docs):
     Parametrized over BOTH all-pairs plans: the small-corpus self-join
     and the Bayardo prefix-filtered plan the operator switches to at
     PREFIX_FILTER_MIN_DOCS (forced here via prefix_min_docs=0); the
-    0.05 threshold stresses the near-full prefix length n−⌈t·n⌉+1."""
+    0.05 threshold stresses the near-full prefix length n−⌈t·n⌉+1.
+    With max_docs=None (no guard probe) the plan is still chosen by
+    doc count, on the right side of prefix_min_docs (48 docs)."""
     import hashlib
 
     from ai_pdf_extraction_spark.operators.dedup import ngram_jaccard_pairs
@@ -174,13 +178,13 @@ def test_ngram_allpairs_matches_python_twin(spark, prefix_min_docs):
         toks = [words[(d * 3 + j) % 40] for j in range(12)]
         rows.append((d, " ".join(toks)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.05, max_shingle_df=None,
-            prefix_min_docs=prefix_min_docs,
-        ).collect()
-    }
+    pairs = ngram_jaccard_pairs(
+        docs, threshold=0.05, max_shingle_df=None, max_docs=max_docs,
+        prefix_min_docs=prefix_min_docs,
+    )
+    optimized = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert ("slice(" in optimized) == prefix_plan
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
 
     def shingles(text):
         t = text.lower().split()

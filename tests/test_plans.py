@@ -494,3 +494,63 @@ def test_corpus_profile_one_scan_and_consistent_marginals(spark):
     for part in (by_lang, by_src, cells):
         assert sum(r["n_docs"] for r in part) == total[0]["n_docs"]
         assert sum(r["total_chars"] for r in part) == total[0]["total_chars"]
+
+
+def _cached_relations(df) -> tuple[int, bool]:
+    """(InMemoryRelation leaves in the cache-substituted plan, whether
+    the plan's root itself is one)."""
+    plan = df._jdf.queryExecution().withCachedData()
+    leaves = plan.collectLeaves()
+    n = sum(
+        leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
+        for i in range(leaves.size())
+    )
+    return n, plan.getClass().getSimpleName() == "InMemoryRelation"
+
+
+def test_persists_do_not_leak_across_queries(spark):
+    """A relation one query persisted must not be substituted into the
+    next query's plan: q88 persists the whole q80 frontier, and a q80
+    built after q88 ran would otherwise be answered from q88's cache."""
+    import __spark_entry__ as e
+
+    fns = e.queries()
+    fresh = _cached_relations(fns["q80_url_frontier_delta"](spark, SF_DIR))
+    fns["q88_frontier_politeness"](spark, SF_DIR).collect()
+    after = _cached_relations(fns["q80_url_frontier_delta"](spark, SF_DIR))
+    assert after == fresh
+    assert not after[1]
+
+
+def test_release_unpersists_everything(spark):
+    import __spark_entry__ as e
+    from ai_pdf_extraction_spark.persist import release
+
+    e.queries()["q88_frontier_politeness"](spark, SF_DIR).collect()
+    jsc = spark.sparkContext._jsc
+    assert jsc.getPersistentRDDs().size() > 0
+    release()
+    assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_contract_goldens_keyed_by_content(tmp_path, monkeypatch):
+    """The golden-parquet oracles are keyed by the documents table's
+    content, not its mtime: a byte copy of the sf dir (fresh mtimes)
+    resolves to the same oracle SQL."""
+    import shutil
+
+    import __spark_entry__ as e
+
+    copy = tmp_path / os.path.basename(os.path.normpath(SF_DIR))
+    shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
+    src = os.path.join(SF_DIR, "documents.parquet")
+    assert os.stat(copy / "documents.parquet").st_mtime_ns != os.stat(src).st_mtime_ns
+    golden = ("q23_simhash_sketch", "q68_bpe_token_counts", "q69_lang_trained",
+              "q72_token_budget_bpe", "q74_sequence_pack")
+    sql = {}
+    for d in (SF_DIR, str(copy)):
+        monkeypatch.setenv("SPARK_GRAFT_CONTRACT_SF", d)
+        oracles = e.oracle_sql()
+        sql[d] = {q: oracles[q] for q in golden}
+    assert sql[SF_DIR] == sql[str(copy)]
+    assert all("_golden_" in sql[SF_DIR][q] for q in golden)
