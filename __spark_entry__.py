@@ -17,26 +17,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
 from ai_pdf_extraction_spark.persist import persist, release
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _fan_out(df: DataFrame, key_col: str) -> DataFrame:
-    """Rebalance a small-file scan before per-row-HEAVY Column/UDF
-    work (``dedup._ensure_parallel`` rule: repartition below 4×
-    parallelism, no-op on a real many-file crawl layout). The
-    testdata parquets are single-row-group files, so byte-range
-    splitting reports N partitions of which N−1 are EMPTY (CLAUDE.md)
-    — without this, a 32-core bench runs e.g. the whole q63 JSON
-    parse + typed-parser projection on ONE task. Results are
-    order-insensitive (driver sorts before hashing), so the shuffle
-    is semantics-free."""
-    from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
-
-    return _ensure_parallel(df, key_col)
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
@@ -697,7 +683,7 @@ def q26_ivf_topk(spark, sf_dir):
     # argmin is an interpreted HOF fold (k·d ops/row) that otherwise
     # runs on the single-row-group scan's one real task
     return ivf_topk(
-        _fan_out(emb, "vec_id"), queries, k=5,
+        _ensure_parallel(emb, "vec_id"), queries, k=5,
         centroids=_ivf_centroids(sf_dir),
     )
 
@@ -1087,7 +1073,7 @@ def q52_lang_detect_wide(spark, sf_dir):
     charset/marker interplay on real corpus text."""
     from ai_pdf_extraction_spark.operators.text_analysis import lang_detect
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     m = F.col("doc_id") % (len(_LANG_SAMPLES) + 1)
     sample = F.col("text")
     for idx, (_lang, snippet) in enumerate(_LANG_SAMPLES):
@@ -1237,7 +1223,7 @@ def q59_lang_trigram(spark, sf_dir):
         lang_detect_trigram,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     samples = _LANG_SAMPLES + _TRIGRAM_SAMPLES
     m = F.col("doc_id") % (len(samples) + 1)
     sample = F.col("text")
@@ -1568,9 +1554,9 @@ def q36_curated_corpus(spark, sf_dir):
     n-gram Jaccard ≥ 0.8). Thin wrapper over the importable plan
     (``plans.curate.curated_corpus``) so the capstone pass ships in the
     package, not just the contract file."""
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus
+    from ai_pdf_extraction_spark.plans.curate import V1, curated_corpus
 
-    return curated_corpus(_t(spark, sf_dir, "documents"))
+    return curated_corpus(_t(spark, sf_dir, "documents"), V1)
 
 
 def q47_currency_codes(spark, sf_dir):
@@ -1779,13 +1765,13 @@ def q57_curated_corpus_v2(spark, sf_dir):
     every survivor — every dedup/filter family the engine ships,
     composed in one plan and value-hashed against the stitched
     oracle."""
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus_v2
+    from ai_pdf_extraction_spark.plans.curate import V2, curated_corpus
 
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    return curated_corpus_v2(d, bench, contamination_n=3)
+    return curated_corpus(d, V2, bench, contamination_n=3)
 
 
 def q62_salted_host_counts(spark, sf_dir):
@@ -1837,7 +1823,7 @@ def q63_schema_registry_apply(spark, sf_dir):
         load_schema,
     )
 
-    o = _fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
+    o = _ensure_parallel(_t(spark, sf_dir, "orders"), "o_orderkey")
     doc = o.select(
         "o_orderkey",
         F.to_json(
@@ -1890,18 +1876,15 @@ def q65_curated_corpus_v3(spark, sf_dir):
     sign-LSH bucketed twin (q64), so paraphrase-class duplicates drop
     too and every leg stays scale-safe (no all-pairs anywhere)."""
     _ensure_shipped(spark)
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus_v3
+    from ai_pdf_extraction_spark.plans.curate import V3, curated_corpus
 
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    return curated_corpus_v3(
-        d,
-        bench,
-        _t(spark, sf_dir, "embeddings"),
-        contamination_n=3,
-        cos_threshold=0.45,
+    return curated_corpus(
+        d, V3, bench, _t(spark, sf_dir, "embeddings"),
+        contamination_n=3, cos_threshold=0.45,
     )
 
 
@@ -2042,7 +2025,7 @@ def q80_url_frontier_delta(spark, sf_dir):
 
     # the staged canonicalizer is ~20 regex ops per url — by far the
     # heaviest per-row leg of every composed frontier plan (q83/q88)
-    e = _fan_out(_t(spark, sf_dir, "events"), "event_id")
+    e = _ensure_parallel(_t(spark, sf_dir, "events"), "event_id")
     pages = e.select("event_id", _q80_messy_url().alias("url"))
     # index-build job: one distinct over the historical partition
     # (staged canonicalizer: this leg used to dominate the composed
@@ -2078,7 +2061,7 @@ def _q84_links(spark, sf_dir):
     host one in/out edge, fixed point = scale — so ranks would carry
     no signal); the other half concentrate on hosts 0-2, skewing
     in-degree so the rank vector genuinely differentiates."""
-    e = _fan_out(_t(spark, sf_dir, "events"), "event_id")
+    e = _ensure_parallel(_t(spark, sf_dir, "events"), "event_id")
     eid = F.col("event_id")
     dst_hid = F.when(eid % 2 == 0, (eid * 7 + 3) % 13).otherwise(eid % 3)
     # coalesce: non-nullable urls (identity — event_id never nulls), or
@@ -2903,7 +2886,7 @@ def q68_bpe_token_counts(spark, sf_dir):
         token_count_bpe_exact,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id", token_count_bpe_exact("text").alias("n_tokens_bpe")
     )
@@ -2921,7 +2904,7 @@ def q72_token_budget_bpe(spark, sf_dir):
         token_count_bpe_exact,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     scored = d.select(
         "doc_id",
         "lang",
@@ -2974,7 +2957,7 @@ def q69_lang_trained(spark, sf_dir):
         lang_detect_trained,
     )
 
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     samples = _lid_samples()
     m = F.col("doc_id") % (len(samples) + 1)
     sample = F.col("text")
@@ -3150,19 +3133,15 @@ def q73_curated_corpus_v4(spark, sf_dir):
     byte-exact remaining text. Runs over the span-planted docs (q67's
     shared header/footer) so the span leg is non-vacuous."""
     _ensure_shipped(spark)
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus_v4
+    from ai_pdf_extraction_spark.plans.curate import V4, curated_corpus
 
     d = _q73_docs(spark, sf_dir)
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    return curated_corpus_v4(
-        d,
-        bench,
-        _t(spark, sf_dir, "embeddings"),
-        contamination_n=3,
-        cos_threshold=0.45,
-        span_k=8,
+    return curated_corpus(
+        d, V4, bench, _t(spark, sf_dir, "embeddings"),
+        contamination_n=3, cos_threshold=0.45, span_k=8,
     )
 
 
@@ -3179,19 +3158,15 @@ def q79_curated_corpus_v5(spark, sf_dir):
     nothing). The span leg's non-vacuous check is q73's job; here the
     LM leg must actually split the corpus."""
     _ensure_shipped(spark)
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus_v5
+    from ai_pdf_extraction_spark.plans.curate import V5, curated_corpus
 
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    return curated_corpus_v5(
-        d,
-        bench,
-        _t(spark, sf_dir, "embeddings"),
-        contamination_n=3,
-        cos_threshold=0.45,
-        span_k=8,
+    return curated_corpus(
+        d, V5, bench, _t(spark, sf_dir, "embeddings"),
+        contamination_n=3, cos_threshold=0.45, span_k=8,
     )
 
 
@@ -3382,7 +3357,7 @@ def _q99_pages(spark, sf_dir):
     fragment link (doc_id%4), a relative or ``mailto:`` link
     (doc_id%5), a ``javascript:`` link on doc_id%6==0, and an
     href-less ``<a name=…>`` that must not match at all."""
-    d = _fan_out(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _ensure_parallel(_t(spark, sf_dir, "documents"), "doc_id")
     did = F.col("doc_id")
     src = F.concat(
         F.lit("http://www.site"),
@@ -5118,7 +5093,7 @@ def _curate_v4_sql(fingerprint_expr: str) -> str:
     relation (every ``from documents`` in the shared template becomes
     ``from docs2``), wrapped as a CTE, then the span-dedup chain runs
     over the SURVIVOR set only — the same composition as
-    ``plans.curate.curated_corpus_v4``."""
+    ``plans.curate.curated_corpus`` with legs ``V4``."""
     v3sql = _curate_v2_sql(
         fingerprint_expr,
         extra_cte=_emb_losers_cte(),
@@ -5151,7 +5126,7 @@ def _curate_v5_sql(fingerprint_expr: str) -> str:
     text) runs over docs2 restricted to v4 survivors, and the final
     select keeps head/middle only; docs2 is re-rooted on the RAW
     documents (see q79_curated_corpus_v5's vacuity note). Same
-    composition as ``plans.curate.curated_corpus_v5``."""
+    composition as ``plans.curate.curated_corpus`` with legs ``V5``."""
     v4sql = _curate_v4_sql(fingerprint_expr).replace(
         _q73_docs_cte().strip(),
         "docs2 as (\n  select doc_id, lang, text from documents\n)",

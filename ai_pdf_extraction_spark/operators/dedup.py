@@ -303,7 +303,13 @@ def _ensure_parallel(docs: DataFrame, id_col: str) -> DataFrame:
     skips this. Never repartitions DOWN: inputs already wider than the
     2× target keep their width (only empties get rebalanced). Inputs
     explicitly marked by :func:`mark_parallel_balanced` (the caller
-    just repartitioned them itself) are trusted as-is."""
+    just repartitioned them itself) are trusted as-is.
+
+    The contract queries also call it on a scan before per-row-HEAVY
+    Column/UDF projections (without it, q63's whole JSON parse +
+    typed-parser projection ran on ONE task of a 32-core bench). The
+    hash repartition only reorders rows, which no order-insensitive
+    consumer can see."""
     if getattr(docs, _BALANCED_ATTR, False):
         return docs
     target = docs.sparkSession.sparkContext.defaultParallelism

@@ -8,8 +8,13 @@ Usage::
         jobs/curate_job.py --input <documents parquet> \
         --output <curated parquet dir> \
         [--quality 0.5] [--jaccard 0.8] [--partitions 64] \
-        [--benchmark <eval parquet> [--contamination-n 13]] \
-        [--embeddings <vec parquet> [--cos-threshold 0.95]]  # v3 pass
+        [--benchmark <eval parquet> [--contamination-n 13] \
+         [--embeddings <vec parquet> [--cos-threshold 0.95] [--dim 64]]]
+
+Legs (``plans.curate``): ``V1`` by default, ``V2`` with
+``--benchmark`` (adds decontamination + granule-dedup stats), ``V3``
+with ``--benchmark`` and ``--embeddings`` (adds semantic embedding
+dedup).
 
 Same contract as ``extract_job``: public package API only, so the
 file submits unchanged to a real cluster.
@@ -32,7 +37,7 @@ def main() -> None:
         "--benchmark",
         default=None,
         help="parquet of (bench_id, text) eval items — those exact column "
-        "names; when given, runs the v2 pass (adds decontamination + "
+        "names; when given, runs the V2 legs (adds decontamination + "
         "granule-dedup stats)",
     )
     parser.add_argument("--contamination-n", type=int, default=13)
@@ -40,54 +45,38 @@ def main() -> None:
         "--embeddings",
         default=None,
         help="parquet of (vec_id, embedding) keyed like the doc ids; with "
-        "--benchmark, runs the v3 pass (adds semantic embedding dedup via "
+        "--benchmark, runs the V3 legs (adds semantic embedding dedup via "
         "the sign-LSH bucketed pair search)",
     )
     parser.add_argument("--cos-threshold", type=float, default=0.95)
     parser.add_argument(
         "--dim", type=int, default=64,
-        help="embedding dimension (the v3 sign-LSH planes are built for "
+        help="embedding dimension (the V3 sign-LSH planes are built for "
         "it; a mismatch fails loud)",
     )
     args = parser.parse_args()
 
-    from ai_pdf_extraction_spark.plans.curate import (
-        curated_corpus,
-        curated_corpus_v2,
-        curated_corpus_v3,
-    )
+    if args.embeddings and not args.benchmark:
+        raise SystemExit("--embeddings requires --benchmark (the V3 legs)")
+
+    from ai_pdf_extraction_spark.plans.curate import V1, V2, V3, curated_corpus
     from ai_pdf_extraction_spark.session import build_session
 
     spark = build_session(app_name="curate")
     docs = spark.read.parquet(args.input)
     n_in = docs.count()
-    if args.benchmark and args.embeddings:
-        curated = curated_corpus_v3(
-            docs,
-            spark.read.parquet(args.benchmark),
-            spark.read.parquet(args.embeddings),
-            quality_threshold=args.quality,
-            jaccard_threshold=args.jaccard,
-            contamination_n=args.contamination_n,
-            cos_threshold=args.cos_threshold,
-            dim=args.dim,
-        )
-    elif args.embeddings:
-        raise SystemExit("--embeddings requires --benchmark (the v3 pass)")
-    elif args.benchmark:
-        curated = curated_corpus_v2(
-            docs,
-            spark.read.parquet(args.benchmark),
-            quality_threshold=args.quality,
-            jaccard_threshold=args.jaccard,
-            contamination_n=args.contamination_n,
-        )
-    else:
-        curated = curated_corpus(
-            docs,
-            quality_threshold=args.quality,
-            jaccard_threshold=args.jaccard,
-        )
+    legs = V3 if args.embeddings else V2 if args.benchmark else V1
+    curated = curated_corpus(
+        docs,
+        legs,
+        spark.read.parquet(args.benchmark) if args.benchmark else None,
+        spark.read.parquet(args.embeddings) if args.embeddings else None,
+        quality_threshold=args.quality,
+        jaccard_threshold=args.jaccard,
+        contamination_n=args.contamination_n,
+        cos_threshold=args.cos_threshold,
+        dim=args.dim,
+    )
     writer = curated.repartition(args.partitions) if args.partitions else curated
     writer.write.mode("overwrite").parquet(args.output)
     out = spark.read.parquet(args.output)

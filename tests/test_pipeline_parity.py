@@ -9,6 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
+
 
 def test_extraction_parity_byte_identical(spark, corpus_dir, tmp_path):
     from ai_pdf_extraction_spark.plans.pipeline import run_extraction
@@ -321,30 +323,42 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 def test_curated_corpus_without_lang_column(spark):
     """A docs relation with no `lang` column still curates — the narrow
     projection fills null lang instead of failing analysis (usability:
-    not every corpus carries language metadata)."""
-    from ai_pdf_extraction_spark.plans.curate import curated_corpus
+    not every corpus carries language metadata) — through every leg,
+    contamination, granule, span and LM included."""
+    from ai_pdf_extraction_spark.plans.curate import V1, V5, curated_corpus
 
     docs = spark.createDataFrame(
         [(i, f"some document body text number {i} with several words here")
          for i in range(30)],
         "doc_id long, text string",
     )
-    out = curated_corpus(docs, quality_threshold=0.0).collect()
+    out = curated_corpus(docs, V1, quality_threshold=0.0).collect()
     assert len(out) == 30
     assert all(r["lang"] is None for r in out)
 
+    # the contract documents minus their lang column: text the committed
+    # LM buckets head/middle, so every leg keeps rows
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
+        "doc_id", "text"
+    )
+    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
+        F.col("doc_id").alias("bench_id"), "text"
+    )
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    v5 = curated_corpus(docs, V5, bench, emb, contamination_n=3,
+                        cos_threshold=0.45)
+    assert set(v5.columns) >= {"lang", "n_granules", "span_md5", "ppl_bucket"}
+    rows = v5.collect()
+    assert rows and all(r["lang"] is None for r in rows)
+
 
 def test_curated_corpus_v4_span_leg(spark):
-    """v4 = v3's doc set + span stats: same survivors, every survivor
+    """V4 = V3's doc set + span stats: same survivors, every survivor
     carries (n_words, n_removed, span_md5), and a doc whose only text
     is boilerplate shared with an earlier survivor loses that span —
     while the FIRST carrier keeps it (removal is computed WITHIN the
     surviving set, first occurrence wins)."""
-    from ai_pdf_extraction_spark.plans.curate import (
-        curated_corpus_v3,
-        curated_corpus_v4,
-    )
-    from pyspark.sql import functions as F
+    from ai_pdf_extraction_spark.plans.curate import V3, V4, curated_corpus
 
     boiler = "standard license block repeated verbatim across corpus documents here"
     docs = spark.createDataFrame(
@@ -369,8 +383,8 @@ def test_curated_corpus_v4_span_leg(spark):
     )
     kw = dict(contamination_n=13, cos_threshold=0.999, n_planes=4, dim=4,
               quality_threshold=0.0)
-    v3 = curated_corpus_v3(docs, bench, emb, **kw)
-    v4 = curated_corpus_v4(docs, bench, emb, span_k=8, **kw)
+    v3 = curated_corpus(docs, V3, bench, emb, **kw)
+    v4 = curated_corpus(docs, V4, bench, emb, span_k=8, **kw)
     v3_ids = {r["doc_id"] for r in v3.select("doc_id").collect()}
     rows = {r["doc_id"]: r for r in v4.collect()}
     assert set(rows) == v3_ids  # same survivors, span leg filters nothing
@@ -382,15 +396,12 @@ def test_curated_corpus_v4_span_leg(spark):
 
 
 def test_curated_corpus_v5_lm_leg(spark):
-    """v5 = v4 ∩ {head, middle}: survivors are exactly v4's docs whose
+    """V5 = V4 ∩ {head, middle}: survivors are exactly V4's docs whose
     standalone lm_perplexity bucket is head/middle, each carrying the
     SAME bucket the standalone operator assigns — the LM leg composes,
     it does not recompute differently."""
     from ai_pdf_extraction_spark.operators.lm import lm_perplexity
-    from ai_pdf_extraction_spark.plans.curate import (
-        curated_corpus_v4,
-        curated_corpus_v5,
-    )
+    from ai_pdf_extraction_spark.plans.curate import V4, V5, curated_corpus
 
     docs = spark.createDataFrame(
         [
@@ -422,14 +433,14 @@ def test_curated_corpus_v5_lm_leg(spark):
               quality_threshold=0.0)
     v4_ids = {
         r["doc_id"]
-        for r in curated_corpus_v4(docs, bench, emb, **kw).collect()
+        for r in curated_corpus(docs, V4, bench, emb, **kw).collect()
     }
     standalone = {
         r["doc_id"]: r["ppl_bucket"] for r in lm_perplexity(docs).collect()
     }
     v5 = {
         r["doc_id"]: r["ppl_bucket"]
-        for r in curated_corpus_v5(docs, bench, emb, **kw).collect()
+        for r in curated_corpus(docs, V5, bench, emb, **kw).collect()
     }
     expect = {
         i: b for i, b in standalone.items()

@@ -313,7 +313,7 @@ def test_capstone_curation_single_source_scan(spark):
     def source_scan_count(df):
         """Parquet-scan leaves across the plan AND the cached plans of
         every distinct InMemoryRelation it references (unwrapping AQE),
-        RECURSIVELY — a persisted capstone (v4 persists the whole v3
+        RECURSIVELY — a persisted capstone (V4 persists the whole V3
         base) nests cached relations inside cached plans, and a
         one-level walk undercounts."""
         jplan = df._jdf.queryExecution().optimizedPlan()
@@ -374,40 +374,33 @@ def test_capstone_curation_single_source_scan(spark):
         [(1, "alpha beta gamma")], "bench_id long, text string"
     )
 
-    v1 = curate.curated_corpus(docs)
-    n_scans, n_cached = source_scan_count(v1)
-    assert n_scans == 1, f"v1 scans the source {n_scans}x (want 1)"
-    assert n_cached >= 2  # narrow projection + shingle relation
-
-    v2 = curate.curated_corpus_v2(docs, bench, contamination_n=3)
-    n_scans, n_cached = source_scan_count(v2)
-    assert n_scans == 1, f"v2 scans the source {n_scans}x (want 1)"
-    assert n_cached >= 3  # narrow + shingles + granules
-    # sanity: the composed plan still produces rows
-    assert v2.count() > 0
-
-    # v3 adds the embeddings relation: docs still scanned once, plus
-    # exactly one embeddings scan (the LSH-bucketed loser leg)
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    v3 = curate.curated_corpus_v3(docs, bench, emb, contamination_n=3,
-                                  cos_threshold=0.45)
-    n_scans, n_cached = source_scan_count(v3)
-    assert n_scans == 2, f"v3: want docs once + embeddings once, got {n_scans}"
-
-    # v4's span leg must read the SAME narrow projection, not re-join
-    # the raw source (review r7: the wide-docs semi-join silently
-    # reintroduced a second full text-column scan)
-    v4 = curate.curated_corpus_v4(docs, bench, emb, contamination_n=3,
-                                  cos_threshold=0.45)
-    n_scans, n_cached = source_scan_count(v4)
-    assert n_scans == 2, f"v4: want docs once + embeddings once, got {n_scans}"
-
-    # v5's LM leg scores the SAME narrow projection (the tiny model
-    # relations are driver-built LogicalRDDs, not source scans)
-    v5 = curate.curated_corpus_v5(docs, bench, emb, contamination_n=3,
-                                  cos_threshold=0.45)
-    n_scans, n_cached = source_scan_count(v5)
-    assert n_scans == 2, f"v5: want docs once + embeddings once, got {n_scans}"
+    # (legs, inputs, source scans, min cached relations). V3 adds the
+    # embeddings relation: docs still scanned once, plus exactly one
+    # embeddings scan (the LSH-bucketed loser leg). V4's span leg must
+    # read the SAME narrow projection, not re-join the raw source
+    # (review r7: the wide-docs semi-join silently reintroduced a second
+    # full text-column scan); V5's LM leg scores it too (the tiny model
+    # relations are driver-built LogicalRDDs, not source scans).
+    cases = [
+        (curate.V1, (), 1, 2),  # narrow projection + shingle relation
+        (curate.V2, (bench,), 1, 3),  # narrow + shingles + granules
+        (curate.V3, (bench, emb), 2, 0),
+        (curate.V4, (bench, emb), 2, 0),
+        (curate.V5, (bench, emb), 2, 0),
+    ]
+    for legs, inputs, want_scans, min_cached in cases:
+        df = curate.curated_corpus(
+            docs, legs, *inputs, contamination_n=3, cos_threshold=0.45
+        )
+        n_scans, n_cached = source_scan_count(df)
+        assert n_scans == want_scans, (
+            f"{legs[-1]}: {n_scans} source scans (want {want_scans})"
+        )
+        assert n_cached >= min_cached, (legs[-1], n_cached)
+        if legs == curate.V2:
+            # sanity: the composed plan still produces rows
+            assert df.count() > 0
 
 
 def test_salted_host_counts_two_phase_agg(spark):

@@ -89,7 +89,7 @@ def profile_capstone(spark, sf_dir):
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    narrow = _narrow_docs(d, "doc_id", "text")
+    narrow = _narrow_docs(d)
     _timed(spark, "narrow materialize", lambda: narrow.count(), n=1)
     _timed(
         spark, "quality+tokens leg",
@@ -126,7 +126,7 @@ def profile_q71(spark, sf_dir):
 
 def main():
     which = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf1.0"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     from ai_pdf_extraction_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
