@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_pdf_extraction_spark.fixtures import cached, parquet_digest
 from ai_pdf_extraction_spark.operators.dedup import _ensure_parallel
 from ai_pdf_extraction_spark.persist import persist, release
 
@@ -29,8 +30,9 @@ def _ensure_shipped(spark: SparkSession) -> None:
     """Queries that execute Python UDFs referencing module-level
     functions need ``ai_pdf_extraction_spark`` importable on the
     executors' Python workers. The driver harness builds its own
-    SparkSession (our ``build_session`` isn't in the loop), so ship
-    the package zip here — idempotent, cheap."""
+    SparkSession (our ``build_session`` isn't in the loop), so every
+    ``queries()`` entry ships the package zip (``_query_scope``) —
+    idempotent, cheap."""
     try:
         from ai_pdf_extraction_spark.session import _ship_package
 
@@ -407,51 +409,30 @@ def q22_minhash_lsh_pairs(spark, sf_dir):
     )
 
 
-def _contract_docs_digest(extra: str = "") -> tuple[str, str, str]:
-    """``(documents.parquet, sf tag, cache digest)`` of the contract
-    documents table the golden oracles (q23, q68, q69) are built from.
-
-    The sf dir comes from ``SPARK_GRAFT_CONTRACT_SF`` (set by
-    ``tools/check_contract.py``) and defaults to the driver's sf0.01.
-    The digest is over the parquet FOOTER's bytes — schema, row count,
-    per-chunk sizes and statistics — plus ``extra`` (the model or
-    merge-table digest). It is keyed by content, so a regenerated
-    table never compares against a stale golden, while a copy of the
-    same table (new mtimes) resolves to the same golden path."""
-    import hashlib
-
+def _contract_golden(name: str, versions: tuple, write) -> str:
+    """Golden parquet ``write(documents.parquet, out)`` builds from the
+    contract documents table (q23, q68, q69), keyed by ``versions`` and
+    the table's ``parquet_digest``. The sf dir comes from
+    ``SPARK_GRAFT_CONTRACT_SF`` (set by ``tools/check_contract.py``) and
+    defaults to sf0.01, the contract's compare scale. A missing table
+    skips the build: the oracle then fails loudly reading its path."""
     sf_dir = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
     src = os.path.join(sf_dir, "documents.parquet")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     if not os.path.exists(src):
-        return src, tag, "missing"
-    with open(src, "rb") as fh:
-        # file tail: <footer><4-byte little-endian footer length>PAR1
-        fh.seek(-8, os.SEEK_END)
-        footer_len = int.from_bytes(fh.read(4), "little")
-        fh.seek(-8 - footer_len, os.SEEK_END)
-        footer = fh.read(footer_len)
-    digest = hashlib.md5(footer + extra.encode()).hexdigest()[:12]
-    return src, tag, digest
+        return src
+    return cached(name, (*versions, parquet_digest(src)), lambda out: write(src, out))
 
 
 def _q23_golden_path() -> str:
-    """Golden parquet for the 64-bit SimHash oracle: DuckDB has no
-    xxhash64, so the oracle is an independent pure-Python XXH64 +
-    SimHash computed single-process from the contract documents table
-    (``oracle/xxh64.py``), pinned against Spark in pytest. The cache
-    key covers the twin's semantics version AND the source table's
-    content digest (``_contract_docs_digest``)."""
-    from ai_pdf_extraction_spark.oracle.xxh64 import (
-        TWIN_VERSION,
-        write_simhash_golden,
-    )
+    """Golden for the 64-bit SimHash oracle: DuckDB has no xxhash64, so
+    the oracle is an independent pure-Python XXH64 + SimHash computed
+    single-process (``oracle/xxh64.py``), pinned against Spark in
+    pytest."""
+    from ai_pdf_extraction_spark.oracle import xxh64
 
-    src, tag, digest = _contract_docs_digest()
-    out = f"/tmp/spark_graft_simhash64_golden_t{TWIN_VERSION}_{tag}_{digest}.parquet"
-    if not os.path.exists(out) and os.path.exists(src):
-        write_simhash_golden(src, out)
-    return out
+    return _contract_golden(
+        "simhash64_golden", (xxh64.TWIN_VERSION,), xxh64.write_simhash_golden
+    )
 
 
 def q23_simhash_sketch(spark, sf_dir):
@@ -469,7 +450,6 @@ def q35_simhash16(spark, sf_dir):
 
 
 def q24_embedding_near_dup(spark, sf_dir):
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.dedup import embedding_near_dup_pairs
 
     return embedding_near_dup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.45)
@@ -488,72 +468,45 @@ def q25_ann_topk(spark, sf_dir):
     return cosine_topk(emb, queries, k=5)
 
 
-_IVF_CACHE: dict[str, list] = {}
+def _embeddings_key(sf_dir: str) -> tuple[str, str]:
+    """(content digest, path) of ``sf_dir``'s embeddings table."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    return parquet_digest(path), path
+
+
+@functools.cache
+def _train_ivf(digest: str, path: str) -> list:
+    """Deterministic k-means coarse quantizer for one embeddings table,
+    trained once per content digest (``path`` only locates it).
+    Spark-free, so ``oracle_sql()`` trains the identical centroids from
+    ``SPARK_GRAFT_CONTRACT_SF``'s table."""
+    from ai_pdf_extraction_spark.operators import similarity as sim
+
+    return sim.train_ivf_centroids(
+        sim.load_embedding_sample(path), n_clusters=8, n_iters=10, seed=13
+    )
+
+
+@functools.cache
+def _train_pq(digest: str, path: str, residual: bool) -> list:
+    """Deterministic per-subspace PQ codebooks, ``_train_ivf``'s
+    contract. ``residual`` trains on ``x − centroid[coarse]`` (Jégou
+    2011 §III / FAISS IVFPQ default; assignment via the plan's round-6
+    first-match rule) with the same sample and (m, n_codes, seed)."""
+    from ai_pdf_extraction_spark.operators import similarity as sim
+
+    return sim.train_pq_codebooks(
+        sim.load_embedding_sample(path), m=8, n_codes=16, n_iters=10, seed=17,
+        centroids=_train_ivf(digest, path) if residual else None,
+    )
 
 
 def _ivf_centroids(sf_dir: str) -> list:
-    """Deterministic k-means coarse quantizer for ``sf_dir``'s
-    embeddings table (trained once per path; Spark-free so
-    ``oracle_sql()`` trains the identical centroids — same
-    ``SPARK_GRAFT_CONTRACT_SF`` contract as the q23 golden)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    got = _IVF_CACHE.get(path)
-    if got is None:
-        from ai_pdf_extraction_spark.operators.similarity import (
-            load_embedding_sample,
-            train_ivf_centroids,
-        )
-
-        got = train_ivf_centroids(
-            load_embedding_sample(path), n_clusters=8, n_iters=10, seed=13
-        )
-        _IVF_CACHE[path] = got
-    return got
+    return _train_ivf(*_embeddings_key(sf_dir))
 
 
-_PQ_CACHE: dict[str, list] = {}
-
-
-def _pq_codebooks(sf_dir: str) -> list:
-    """Deterministic per-subspace PQ codebooks for ``sf_dir``'s
-    embeddings table (trained once per path; Spark-free — the oracle
-    trains the identical books, the ``_ivf_centroids`` contract)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    got = _PQ_CACHE.get(path)
-    if got is None:
-        from ai_pdf_extraction_spark.operators.similarity import (
-            load_embedding_sample,
-            train_pq_codebooks,
-        )
-
-        got = train_pq_codebooks(
-            load_embedding_sample(path), m=8, n_codes=16, n_iters=10, seed=17
-        )
-        _PQ_CACHE[path] = got
-    return got
-
-
-def _pq_codebooks_residual(sf_dir: str) -> list:
-    """Residual-trained PQ codebooks (Jégou 2011 §III / FAISS IVFPQ
-    default): the SAME sample and (m, n_codes, seed) budget as
-    ``_pq_codebooks``, but k-means runs on ``x − centroid[coarse]``
-    (assignment via the plan's round-6 first-match rule) — the q61
-    oracle trains the identical books Spark-free."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = path + "#res"
-    got = _PQ_CACHE.get(key)
-    if got is None:
-        from ai_pdf_extraction_spark.operators.similarity import (
-            load_embedding_sample,
-            train_pq_codebooks,
-        )
-
-        got = train_pq_codebooks(
-            load_embedding_sample(path), m=8, n_codes=16, n_iters=10, seed=17,
-            centroids=_ivf_centroids(sf_dir),
-        )
-        _PQ_CACHE[key] = got
-    return got
+def _pq_codebooks(sf_dir: str, residual: bool = False) -> list:
+    return _train_pq(*_embeddings_key(sf_dir), residual)
 
 
 def _ensure_pq_codes(spark, sf_dir, residual: bool = False) -> str:
@@ -564,44 +517,25 @@ def _ensure_pq_codes(spark, sf_dir, residual: bool = False) -> str:
     x − centroid[coarse], trained on residuals) read this relation back
     and never touch the vector column on the corpus side, which is the
     production shape (encode on ingest, store codes, scan codes per
-    query). ONE cache protocol for both modes (review r6): keyed on
-    PQ_CODES_VERSION + training params + the source path + a ``_res``
-    suffix so raw and residual codes can never silently mix; atomic
-    temp+rename like every other fixture cache."""
-    import hashlib
-    import uuid
-
+    query). Keyed on the table's content digest, so a table rewritten
+    at the same path gets fresh codes, and on the mode, so raw and
+    residual codes never mix."""
     from ai_pdf_extraction_spark.operators.similarity import (
         PQ_CODES_VERSION,
         pq_codes,
     )
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(src.encode()).hexdigest()[:12]
-    suffix = "res_" if residual else ""
-    path = (
-        f"/tmp/spark_graft_pq_codes_v{PQ_CODES_VERSION}"
-        f"_m8c16s17_ivf8s13_{suffix}{key}"
-    )
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        books = (
-            _pq_codebooks_residual(sf_dir) if residual else _pq_codebooks(sf_dir)
-        )
-        codes = pq_codes(
+    def build(out: str) -> None:
+        pq_codes(
             _t(spark, sf_dir, "embeddings"),
-            books,
+            _pq_codebooks(sf_dir, residual),
             centroids=_ivf_centroids(sf_dir),
             residual=residual,
-        )
-        codes.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
+        ).write.parquet(out)
 
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return path
+    digest, _ = _embeddings_key(sf_dir)
+    key = (PQ_CODES_VERSION, "m8c16s17_ivf8s13", residual, digest)
+    return cached("pq_codes", key, build)
 
 
 def q56_pq_topk(spark, sf_dir):
@@ -662,7 +596,7 @@ def q61_ivfpq_residual_topk(spark, sf_dir):
         None,
         queries,
         _ivf_centroids(sf_dir),
-        _pq_codebooks_residual(sf_dir),
+        _pq_codebooks(sf_dir, residual=True),
         k=5,
         nprobe=1,
         codes=codes,
@@ -781,7 +715,6 @@ def q30_token_counts_bpe(spark, sf_dir):
 
 def q31_winnowing_fingerprints(spark, sf_dir):
     """Rolling-hash winnowing fingerprint sketch per document."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.text_analysis import (
         winnowing_fingerprints,
     )
@@ -839,62 +772,66 @@ def q33_json_props(spark, sf_dir):
     )
 
 
-def _q34_golden_path() -> str:
-    """Golden parquet path for the q34/q39 oracles; generates the
-    fixtures on first use (pure pyarrow — safe to call from
-    ``oracle_sql()``). Generation failure (read-only /tmp, missing
-    deps) degrades to the q34/q39 oracles failing at execution with a
-    clear read_parquet error instead of poisoning the whole dict."""
+def _or_missing(name: str, key: tuple, build) -> str:
+    """``cached(name, key, build)``, or a path that does not exist when
+    the build fails (read-only /tmp, missing deps): only the queries
+    and oracles reading this fixture then fail, loudly, at
+    read_parquet, instead of the whole ``oracle_sql()`` dict."""
     try:
-        return _ensure_q34_fixtures()[1]
-    except Exception:
-        return _q34_fixture_paths()[1]
+        return cached(name, key, build)
+    except Exception as exc:
+        import warnings
+
+        warnings.warn(f"fixture {name} not built: {exc!r}", stacklevel=2)
+        return f"/nonexistent/spark_graft_{name}"
 
 
-def _q34_fixture_paths() -> tuple[str, str]:
+# the q34 fixture corpus: 600 generated pages, seed 13
+_Q34_N, _Q34_SEED = 600, 13
+
+
+def _q34_pages() -> str:
+    """The deterministic q34 page corpus (4 part files) that
+    q34/q39/q46/q48 extract."""
+    from ai_pdf_extraction_spark.corpus import write_pages_parquet
     from ai_pdf_extraction_spark.corpus.generate import CORPUS_VERSION
+
+    return cached(
+        "contract_pages", (CORPUS_VERSION, _Q34_N, _Q34_SEED, 4),
+        lambda out: write_pages_parquet(out, _Q34_N, seed=_Q34_SEED, n_files=4),
+    )
+
+
+def _q34_golden(name: str, write) -> str:
+    """A single-process oracle-kernel golden over the q34 corpus rows
+    (the analogue of the reference's stored ``extraction_results.json``
+    corpora), keyed on the corpus AND kernel versions. Pure pyarrow,
+    so ``oracle_sql()`` builds it too."""
+    from ai_pdf_extraction_spark.corpus.generate import (
+        CORPUS_VERSION,
+        generate_pages,
+    )
     from ai_pdf_extraction_spark.kernels import KERNEL_VERSION
 
-    base = f"/tmp/spark_graft_contract_pages_v{CORPUS_VERSION}_600_13"
-    # golden keyed on the KERNEL version too: a kernel-semantics change
-    # must never be compared against a stale cached golden
-    return base, base + f"_golden_k{KERNEL_VERSION}.parquet"
+    return _or_missing(
+        name, (CORPUS_VERSION, KERNEL_VERSION, _Q34_N, _Q34_SEED),
+        lambda out: write(out, generate_pages(_Q34_N, seed=_Q34_SEED)),
+    )
 
 
-def _ensure_q34_fixtures() -> tuple[str, str]:
-    """Generate (once) the deterministic page corpus AND its golden
-    parquet — the single-process oracle-kernel run (the analogue of the
-    reference's stored ``extraction_results.json`` corpora). Pure
-    pyarrow, no Spark, so ``oracle_sql()`` can build it too."""
-    from ai_pdf_extraction_spark.corpus import write_pages_parquet
-    from ai_pdf_extraction_spark.corpus.generate import generate_pages
+def _q34_golden_path() -> str:
+    """Extraction golden for the q34/q39/q51 oracles."""
     from ai_pdf_extraction_spark.oracle.run_reference import write_golden_parquet
 
-    pages_path, golden_path = _q34_fixture_paths()
-    if not os.path.exists(pages_path):
-        write_pages_parquet(pages_path, 600, seed=13, n_files=4)
-    if not os.path.exists(golden_path):
-        write_golden_parquet(golden_path, generate_pages(600, seed=13))
-    return pages_path, golden_path
+    return _q34_golden("contract_golden", write_golden_parquet)
 
 
 def _q46_golden_path() -> str:
-    """Exploded structured-table-rows golden (q46): one row per
-    (url, t_idx, r_idx, key). Same corpus/kernel cache keying as q34."""
+    """Exploded structured-table-rows golden (q46/q48): one row per
+    (url, t_idx, r_idx, key)."""
     from ai_pdf_extraction_spark.oracle.run_reference import write_table_rows_golden
 
-    base, _ = _q34_fixture_paths()
-    from ai_pdf_extraction_spark.kernels import KERNEL_VERSION
-
-    path = base + f"_tables_k{KERNEL_VERSION}.parquet"
-    if not os.path.exists(path):
-        from ai_pdf_extraction_spark.corpus.generate import generate_pages
-
-        try:
-            write_table_rows_golden(path, generate_pages(600, seed=13))
-        except Exception:
-            pass  # degrade to a loud read_parquet error at oracle time
-    return path
+    return _q34_golden("contract_tables_golden", write_table_rows_golden)
 
 
 def _sig_escape_col(c):
@@ -979,23 +916,18 @@ def q34_extract_pages(spark, sf_dir):
     parquet written by the single-process oracle kernels — the driver
     hash covers the extracted text bytes (md5), span offsets/kinds and
     warnings, i.e. the BASELINE north_rule's byte-identical invariant."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
-    plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
+    plan = extraction_plan(spark.read.parquet(_q34_pages()), run_id="contract")
     return _signature_cols(plan)
 
 
-def _ensure_warc_fixtures() -> str:
+def _warc_shards() -> str:
     """Deterministic WARC twin of the q34 page corpus: the same 600
     ``generate_pages`` rows written as 8 ``.warc.gz`` shards (one gzip
     member per record — the Common Crawl layout). The html payloads
     ride the WARC/HTTP envelope byte-identically, so extraction over
-    ``read_warc`` must hash-match the q34 golden exactly. Atomic
-    temp+rename like every other fixture cache."""
-    import uuid
-
+    ``read_warc`` must hash-match the q34 golden exactly."""
     from ai_pdf_extraction_spark.corpus.generate import (
         CORPUS_VERSION,
         generate_pages,
@@ -1005,28 +937,15 @@ def _ensure_warc_fixtures() -> str:
         write_warc,
     )
 
-    path = (
-        f"/tmp/spark_graft_contract_warc_v{CORPUS_VERSION}"
-        f"w{WARC_FORMAT_VERSION}_600_13"
-    )
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp)
-        rows = generate_pages(600, seed=13)
-        n_shards = 8
-        for s in range(n_shards):
-            write_warc(
-                os.path.join(tmp, f"part-{s:02d}.warc.gz"),
-                rows[s::n_shards],
-                compress=True,
-            )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
+    def build(out: str) -> None:
+        os.mkdir(out)
+        rows = generate_pages(_Q34_N, seed=_Q34_SEED)
+        for s in range(8):
+            path = os.path.join(out, f"part-{s:02d}.warc.gz")
+            write_warc(path, rows[s::8], compress=True)
 
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return path
+    key = (CORPUS_VERSION, WARC_FORMAT_VERSION, _Q34_N, _Q34_SEED, 8)
+    return cached("contract_warc", key, build)
 
 
 def q51_warc_extract(spark, sf_dir):
@@ -1036,11 +955,10 @@ def q51_warc_extract(spark, sf_dir):
     the extraction pipeline → the same signature columns, value-hashed
     against the SAME single-process golden as q34 — proving the WARC
     envelope/parse is byte-transparent to extraction."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
     from ai_pdf_extraction_spark.sources.warc import read_warc
 
-    pages = read_warc(spark, _ensure_warc_fixtures())
+    pages = read_warc(spark, _warc_shards())
     plan = extraction_plan(pages, run_id="contract-warc")
     return _signature_cols(plan)
 
@@ -1396,12 +1314,10 @@ def q39_field_confidences(spark, sf_dir):
     """Per-field confidences (reference ``field_confidences`` dict,
     ``models.py:186-199``) surfaced as one column per span kind via map
     element_at — checked against the oracle-kernel golden parquet."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.oracle.run_reference import FIELD_KINDS
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
-    plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
+    plan = extraction_plan(spark.read.parquet(_q34_pages()), run_id="contract")
     return plan.select(
         "url",
         *[
@@ -1416,8 +1332,7 @@ def _exploded_table_rows(spark) -> DataFrame:
     row per (url, t_idx, r_idx, key, value) — shared by q46/q48."""
     from ai_pdf_extraction_spark.plans.pipeline import extraction_plan
 
-    pages_path, _ = _ensure_q34_fixtures()
-    plan = extraction_plan(spark.read.parquet(pages_path), run_id="contract")
+    plan = extraction_plan(spark.read.parquet(_q34_pages()), run_id="contract")
     return (
         plan.select("url", F.posexplode("tables").alias("t_idx", "tbl"))
         .select("url", "t_idx", F.posexplode("tbl").alias("r_idx", "rec"))
@@ -1438,7 +1353,6 @@ def q46_table_rows(spark, sf_dir):
     single-process oracle kernel's exploded golden parquet. The
     nested payload itself rides the output table as
     ``tables array<array<map<string,string>>>``."""
-    _ensure_shipped(spark)
     return _exploded_table_rows(spark)
 
 
@@ -1605,7 +1519,6 @@ def q48_table_field_rollup(spark, sf_dir):
     the corpus's ``'NNN units'`` amount cells with parse_number, roll
     up count and sum per document. Oracle runs the same arithmetic on
     the exploded oracle-kernel golden."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.functions.normalize import parse_number
 
     rows = _exploded_table_rows(spark)
@@ -1618,47 +1531,32 @@ def q48_table_field_rollup(spark, sf_dir):
     )
 
 
-# single source of truth for the media fixture shape — the parquet,
-# the probe golden, AND the q53 decode golden must all derive from it
-_MEDIA_FIXTURE_N, _MEDIA_FIXTURE_SEED = 240, 21
+def _media_fixture(name: str, version: int, write) -> str:
+    """``write(out, rows)`` over the deterministic media rows (240,
+    seed 21 — wav/bmp/png/jpeg/junk bytes built with struct/wave, no
+    codec libs), keyed on the fixture version and the ``version`` of
+    the semantics it records. Pure pyarrow, so ``oracle_sql()`` builds
+    it too."""
+    from ai_pdf_extraction_spark.operators.multimodal import (
+        MEDIA_FIXTURE_VERSION,
+        generate_media_rows,
+    )
 
-
-def _media_fixture_base() -> str:
-    from ai_pdf_extraction_spark.operators.multimodal import MEDIA_FIXTURE_VERSION
-
-    return (
-        f"/tmp/spark_graft_media_v{MEDIA_FIXTURE_VERSION}"
-        f"_{_MEDIA_FIXTURE_N}_{_MEDIA_FIXTURE_SEED}"
+    return _or_missing(
+        name, (MEDIA_FIXTURE_VERSION, version, 240, 21),
+        lambda out: write(out, generate_media_rows(240, seed=21)),
     )
 
 
-def _media_fixture_rows():
-    from ai_pdf_extraction_spark.operators.multimodal import generate_media_rows
+def _media_fixtures() -> tuple[str, str]:
+    """(media parquet, its single-process probe golden)."""
+    from ai_pdf_extraction_spark.operators.multimodal import (
+        MEDIA_PROBE_VERSION,
+        write_media_fixtures,
+    )
 
-    return generate_media_rows(_MEDIA_FIXTURE_N, seed=_MEDIA_FIXTURE_SEED)
-
-
-def _media_fixture_paths() -> tuple[str, str]:
-    from ai_pdf_extraction_spark.operators.multimodal import MEDIA_PROBE_VERSION
-
-    base = _media_fixture_base()
-    # golden keyed on probe semantics too (the q34 _golden_k pattern)
-    return base + ".parquet", base + f"_golden_p{MEDIA_PROBE_VERSION}.parquet"
-
-
-def _ensure_media_fixtures() -> tuple[str, str]:
-    """Deterministic media corpus (wav/bmp/png/jpeg/junk bytes built
-    with struct/wave — no codec libs) + its probe golden, both pure
-    pyarrow so ``oracle_sql()`` can build them (the q34 pattern)."""
-    from ai_pdf_extraction_spark.operators.multimodal import write_media_fixtures
-
-    media_path, golden_path = _media_fixture_paths()
-    if not (os.path.exists(media_path) and os.path.exists(golden_path)):
-        try:
-            write_media_fixtures(media_path, golden_path, _media_fixture_rows())
-        except Exception:
-            pass  # degrade to a loud read_parquet error at exec time
-    return media_path, golden_path
+    out = _media_fixture("media", MEDIA_PROBE_VERSION, write_media_fixtures)
+    return f"{out}/media.parquet", f"{out}/golden.parquet"
 
 
 def q49_media_metadata(spark, sf_dir):
@@ -1670,11 +1568,9 @@ def q49_media_metadata(spark, sf_dir):
     independent hand-written literals in
     tests/test_operators.py::test_media_probe_and_stdlib_decode (the
     shared-kernel blind-spot rule)."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.multimodal import media_metadata
 
-    media_path, _ = _ensure_media_fixtures()
-    df = spark.read.parquet(media_path)
+    df = spark.read.parquet(_media_fixtures()[0])
     return media_metadata(df).select(
         "media_id", "media_type", "format", "n_bytes", "width", "height",
         "duration_ms",
@@ -1682,20 +1578,14 @@ def q49_media_metadata(spark, sf_dir):
 
 
 def _decode_golden_path() -> str:
-    """q53 golden: single-process decode summaries over the same media
-    fixture rows, keyed on fixture AND decode-semantics versions."""
+    """q53 golden: single-process decode summaries over the media
+    fixture rows."""
     from ai_pdf_extraction_spark.operators.multimodal import (
         MEDIA_DECODE_VERSION,
         write_decode_golden,
     )
 
-    path = _media_fixture_base() + f"_decode_d{MEDIA_DECODE_VERSION}.parquet"
-    if not os.path.exists(path):
-        try:
-            write_decode_golden(path, _media_fixture_rows())
-        except Exception:
-            pass  # degrade to a loud read_parquet error at oracle time
-    return path
+    return _media_fixture("media_decode_golden", MEDIA_DECODE_VERSION, write_decode_golden)
 
 
 def q53_media_decode(spark, sf_dir):
@@ -1705,11 +1595,9 @@ def q53_media_decode(spark, sf_dir):
     payload md5), value-hashed against a single-process run of the
     same summaries. Plumbing gate like q49/q34; decode arithmetic is
     pinned independently by hand-computed filter/LZW literals."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.multimodal import media_decode_features
 
-    media_path, _ = _ensure_media_fixtures()
-    df = spark.read.parquet(media_path)
+    df = spark.read.parquet(_media_fixtures()[0])
     return media_decode_features(df)
 
 
@@ -1875,7 +1763,6 @@ def q65_curated_corpus_v3(spark, sf_dir):
     ∧ ¬embedding-near-dup-loser — the semantic dedup family via the
     sign-LSH bucketed twin (q64), so paraphrase-class duplicates drop
     too and every leg stays scale-safe (no all-pairs anywhere)."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.curate import V3, curated_corpus
 
     d = _t(spark, sf_dir, "documents")
@@ -2687,7 +2574,6 @@ def q64_embedding_near_dup_lsh(spark, sf_dir):
     operator with its own oracle (same plane literals, same round-4
     half-away cosine, same threshold — the result is exactly q24's
     pair set restricted to same-bucket pairs)."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.dedup import (
         embedding_near_dup_pairs_lsh,
     )
@@ -2853,35 +2739,22 @@ def q70_span_decontaminate(spark, sf_dir):
 
 
 def _q68_golden_path() -> str:
-    """Golden parquet for the exact-BPE oracle: DuckDB has no merge
-    loop, so the oracle is the INDEPENDENT naive twin
-    (``oracle/bpe_naive.py`` — one-leftmost-merge-at-a-time, a
-    different strategy from the kernel's all-occurrences pass) run
-    single-process over the contract documents table. Cache key covers
-    kernel version, twin version, the merge-table digest, AND the
-    source table's content digest — a retrained table or regenerated
-    parquet can never compare against a stale golden."""
+    """Golden for the exact-BPE oracle: DuckDB has no merge loop, so
+    the oracle is the INDEPENDENT naive twin (``oracle/bpe_naive.py`` —
+    one-leftmost-merge-at-a-time, a different strategy from the
+    kernel's all-occurrences pass) run single-process over the contract
+    documents table; keyed on both versions and the merge table."""
     from ai_pdf_extraction_spark.kernels.bpe import BPE_VERSION, merges_digest
-    from ai_pdf_extraction_spark.oracle.bpe_naive import (
-        TWIN_VERSION,
-        write_bpe_golden,
-    )
+    from ai_pdf_extraction_spark.oracle import bpe_naive
 
-    src, tag, digest = _contract_docs_digest(merges_digest())
-    out = (
-        f"/tmp/spark_graft_bpe_golden_k{BPE_VERSION}_t{TWIN_VERSION}"
-        f"_{tag}_{digest}.parquet"
-    )
-    if not os.path.exists(out) and os.path.exists(src):
-        write_bpe_golden(src, out)
-    return out
+    versions = (BPE_VERSION, bpe_naive.TWIN_VERSION, merges_digest())
+    return _contract_golden("bpe_golden", versions, bpe_naive.write_bpe_golden)
 
 
 def q68_bpe_token_counts(spark, sf_dir):
     """EXACT merge-table BPE token counts (repo-trained table, public
     Sennrich algorithm) — upgrading the q30 regex proxy to real token
     prices. Oracle: golden parquet from the independent naive twin."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.text_analysis import (
         token_count_bpe_exact,
     )
@@ -2897,7 +2770,6 @@ def q72_token_budget_bpe(spark, sf_dir):
     budget now prices documents in real tokens (a long-word doc costs
     more than its whitespace count says), which is what a production
     data-mixture job spends against."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.scrub import token_budget_selection
     from ai_pdf_extraction_spark.operators.text_analysis import (
         quality_score,
@@ -2925,25 +2797,17 @@ def _lid_samples() -> list[str]:
 
 
 def _q69_golden_path() -> str:
-    """Golden parquet for the trained-LID oracle: the naive scorer
-    twin (``oracle/lid_naive.py`` — re-derives hashing and argmax from
-    the model-file contract) over the q69 sample substitution. Cache
-    key covers kernel + twin versions, the model digest, and the
-    source table's content digest."""
+    """Golden for the trained-LID oracle: the naive scorer twin
+    (``oracle/lid_naive.py`` — re-derives hashing and argmax from the
+    model-file contract) over the q69 sample substitution; keyed on
+    both versions, the model and the sample params."""
     from ai_pdf_extraction_spark.kernels.lid import LID_VERSION, model_digest
-    from ai_pdf_extraction_spark.oracle.lid_naive import (
-        TWIN_VERSION,
-        write_lid_golden,
-    )
+    from ai_pdf_extraction_spark.oracle import lid_naive
 
-    src, tag, digest = _contract_docs_digest(model_digest())
-    out = (
-        f"/tmp/spark_graft_lid_golden_k{LID_VERSION}_t{TWIN_VERSION}"
-        f"_{tag}_{digest}.parquet"
+    return _contract_golden(
+        "lid_golden", (LID_VERSION, lid_naive.TWIN_VERSION, model_digest(), 40, 777),
+        lambda src, out: lid_naive.write_lid_golden(src, _lid_samples(), out),
     )
-    if not os.path.exists(out) and os.path.exists(src):
-        write_lid_golden(src, _lid_samples(), out)
-    return out
 
 
 def q69_lang_trained(spark, sf_dir):
@@ -2952,7 +2816,6 @@ def q69_lang_trained(spark, sf_dir):
     slot the heuristic detectors stubbed. Docs cycle through 40
     held-out-seed snippets from the labeled generator (the q52/q59
     substitution rule), every 41st keeps its real text."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.text_analysis import (
         lang_detect_trained,
     )
@@ -2973,41 +2836,31 @@ def _lm_model_parquets() -> tuple[str, str, dict]:
     as two tiny parquet relations for the DuckDB oracle — q76's oracle
     is fully RELATIONAL (tokenize → pair → model join → sum), a third
     independent evaluation of the same committed integers (the Spark
-    plan and the naive Python twin are the other two). Cache key: the
-    model file's bytes digest."""
+    plan and the naive Python twin are the other two). Keyed on the
+    model payload's digest."""
     import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from ai_pdf_extraction_spark.operators.lm import LM_VERSION, load_lm_payload
 
     payload = load_lm_payload()
-    digest = hashlib.md5(
-        json.dumps(payload, sort_keys=True).encode()
-    ).hexdigest()[:12]
-    base = f"/tmp/spark_graft_lm_v{LM_VERSION}_{digest}"
-    bi_path, back_path = base + "_bigrams.parquet", base + "_backoff.parquet"
-    if not (os.path.exists(bi_path) and os.path.exists(back_path)):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        bi = payload["bigrams"]
-        pq.write_table(
-            pa.table(
-                {
-                    "v": [r[0] for r in bi],
-                    "w": [r[1] for r in bi],
-                    "q": [int(r[2]) for r in bi],
-                }
-            ),
-            bi_path,
-        )
-        back = payload["backoff"]
-        pq.write_table(
-            pa.table(
-                {"w": [r[0] for r in back], "q": [int(r[1]) for r in back]}
-            ),
-            back_path,
-        )
-    return bi_path, back_path, payload
+    def build(out: str) -> None:
+        bi, back = payload["bigrams"], payload["backoff"]
+        tables = {
+            "bigrams": {"v": [r[0] for r in bi], "w": [r[1] for r in bi],
+                        "q": [int(r[2]) for r in bi]},
+            "backoff": {"w": [r[0] for r in back], "q": [int(r[1]) for r in back]},
+        }
+        os.mkdir(out)
+        for name, cols in tables.items():
+            pq.write_table(pa.table(cols), f"{out}/{name}.parquet")
+
+    digest = hashlib.md5(json.dumps(payload, sort_keys=True).encode()).hexdigest()
+    out = cached("lm", (LM_VERSION, digest), build)
+    return f"{out}/bigrams.parquet", f"{out}/backoff.parquet", payload
 
 
 def q76_lm_perplexity(spark, sf_dir):
@@ -3019,7 +2872,6 @@ def q76_lm_perplexity(spark, sf_dir):
     broadcast model joins → partial-agg groupBy; bucket comparison is
     integer cross-multiplication (sum ≥ cut·n), no division to drift
     between engines."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.lm import lm_perplexity
 
     return lm_perplexity(_t(spark, sf_dir, "documents"))
@@ -3049,7 +2901,6 @@ def q77_mixture_sample(spark, sf_dir):
     with an epoch-keyed md5 re-permutation; the running-sum cut uses
     the two-phase sharded window (no per-source funnel). Token counts
     are the q16 whitespace rule."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.scrub import mixture_sample
     from ai_pdf_extraction_spark.operators.text_analysis import token_count
 
@@ -3072,7 +2923,6 @@ def q78_bpe_pair_counts(spark, sf_dir):
     first merge (highest count, ties → lexicographically smallest).
     Row rnk=1 is the pair `train_bpe` merges first; pairs that occur
     once can never merge and are filtered."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.bpe_train import bpe_pair_counts
 
     return bpe_pair_counts(_t(spark, sf_dir, "documents"))
@@ -3086,7 +2936,6 @@ def q75_embedding_near_dup_delta(spark, sf_dir):
     untouched buckets never enter the search; old×old pairs are never
     emitted. Oracle = same-bucket all-pairs cosine over old ∪ new
     restricted to new-touching pairs (batch equivalence)."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.dedup import (
         embedding_near_dup_delta,
     )
@@ -3112,7 +2961,6 @@ def q74_sequence_pack(spark, sf_dir):
     real pipeline. Global running sum in the two-phase sharded form
     (no single-task window); oracle recomputes from the q68 golden
     counts with one DuckDB window over the same (shard, id) order."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.operators.scrub import sequence_pack
     from ai_pdf_extraction_spark.operators.text_analysis import (
         token_count_bpe_exact,
@@ -3132,7 +2980,6 @@ def q73_curated_corpus_v4(spark, sf_dir):
     excised (computed within the surviving set), span_md5 hashing the
     byte-exact remaining text. Runs over the span-planted docs (q67's
     shared header/footer) so the span leg is non-vacuous."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.curate import V4, curated_corpus
 
     d = _q73_docs(spark, sf_dir)
@@ -3157,7 +3004,6 @@ def q79_curated_corpus_v5(spark, sf_dir):
     would make this contract vacuous (0 rows on both engines proves
     nothing). The span leg's non-vacuous check is q73's job; here the
     LM leg must actually split the corpus."""
-    _ensure_shipped(spark)
     from ai_pdf_extraction_spark.plans.curate import V5, curated_corpus
 
     d = _t(spark, sf_dir, "documents")
@@ -4236,11 +4082,13 @@ def q117_trap_filtered_frontier(spark, sf_dir):
 
 def _query_scope(fn: Callable[[SparkSession, str], DataFrame]):
     """Release the previous query's persists before building this one,
-    so no relation it cached is substituted into this plan."""
+    so no relation it cached is substituted into this plan, and ship
+    the package to the session's executors."""
 
     @functools.wraps(fn)
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         release()
+        _ensure_shipped(spark)
         return fn(spark, sf_dir)
 
     return build
@@ -4825,7 +4673,7 @@ def _q61_oracle_sql() -> str:
     try:
         sf = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.01")
         return _ivfpq_residual_sql(
-            _ivf_centroids(sf), _pq_codebooks_residual(sf)
+            _ivf_centroids(sf), _pq_codebooks(sf, residual=True)
         )
     except Exception:
         return (
@@ -5788,18 +5636,20 @@ from j group by effective_url
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query key.
 
-    CONTRACT: two oracles are sf-dependent at build time — q23 embeds
-    a golden-parquet path materialized from the documents table in
+    CONTRACT: some oracles are sf-dependent at build time — q23, q68,
+    q69 (and q72/q74 through q68) embed golden-parquet paths
+    materialized from the documents table in
     ``$SPARK_GRAFT_CONTRACT_SF`` (default ``/root/testdata/sf0.01``,
-    the driver's compare scale), and q26 embeds k-means centroids
-    trained from that dir's embeddings table — both resolved at the
-    moment this function is called. A driver comparing at any OTHER sf
-    dir must export ``SPARK_GRAFT_CONTRACT_SF=<sf_dir>`` *before*
-    calling ``oracle_sql()`` (``tools/check_contract.py`` does) —
-    otherwise q23/q26 compare against artifacts built from the wrong
-    tables and mismatch loudly. (The q34/q39/q46/q48 goldens are
-    sf-independent: they derive from the fixed 600-doc fixture corpus,
-    keyed on CORPUS_VERSION + KERNEL_VERSION.)"""
+    the contract's compare scale), and q26/q56/q58/q61/q81 embed
+    quantizers trained from that dir's embeddings table — all resolved
+    at the moment this function is called. A caller comparing at any
+    OTHER sf dir must export ``SPARK_GRAFT_CONTRACT_SF=<sf_dir>``
+    *before* calling ``oracle_sql()`` (``tools/check_contract.py``
+    does) — otherwise they compare against artifacts built from the
+    wrong tables and mismatch loudly. (The q34/q39/q46/q48/q49/q51/q53
+    goldens are sf-independent: they derive from fixed generated
+    corpora.) Every ``/tmp`` path here is a ``fixtures.cached``
+    fixture, keyed by content and versions."""
     quality_sql = f"with {_SCORED_CTE} select doc_id, quality from scored"
     from ai_pdf_extraction_spark.operators.urls import _ASSET_EXT_RE
 
@@ -6093,7 +5943,7 @@ select url from (
 """,
         "q49_media_metadata": f"""
 select media_id, media_type, format, n_bytes, width, height, duration_ms
-from read_parquet('{_ensure_media_fixtures()[1]}')
+from read_parquet('{_media_fixtures()[1]}')
 """,
         "q48_table_field_rollup": f"""
 select url, count(*) as n_rows,

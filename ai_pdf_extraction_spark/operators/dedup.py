@@ -388,6 +388,34 @@ def _verify_pairs_by_arrays(
     )
 
 
+def verify_candidate_pairs(
+    sh: DataFrame, candidates: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """The LSH verify step: exact n-gram Jaccard ≥ threshold over the
+    candidate (id_a, id_b) pairs only, from the caller's (id, shingle)
+    relation ``sh`` (distinct per doc and shingle, already capped to
+    the universe both sides of Jaccard use). Output: (id_a, id_b,
+    jaccard) rounded to 4. Linear in candidates, never all-pairs, so
+    no ``max_docs`` guard applies."""
+    # Per-doc shingle ARRAYS + array_intersect instead of the exploded
+    # (pair, shingle) match join: that shape shuffled
+    # |candidates|·|shingles per doc| intermediate rows through a
+    # second join and a pair group-by; this one aggregates the shingle
+    # relation ONCE to (id, set, size) and probes it twice by id (AQE
+    # skew-splittable — a hot doc in many candidate pairs is a join
+    # key, not a window). sh is distinct per (doc, shingle), so
+    # |array_intersect| is the shared count; a pair with zero shared
+    # shingles carries jaccard 0 and drops at the threshold filter
+    # (every caller's threshold is > 0 — the registry pins 0.4/0.8).
+    # Array rows are doc-length-bounded — the granule/boilerplate
+    # collect_list precedent.
+    arrays = sh.groupBy(id_col).agg(
+        F.collect_list("shingle").alias("_shs"),
+        F.count("*").alias("n_shingles"),
+    )
+    return _verify_pairs_by_arrays(candidates, arrays, id_col, threshold)
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -397,21 +425,17 @@ def ngram_jaccard_pairs(
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
     max_docs: int | None = ALL_PAIRS_MAX_DOCS,
     prefix_min_docs: int = PREFIX_FILTER_MIN_DOCS,
-    _shingles: DataFrame | None = None,
-    _candidates: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs with n-gram Jaccard ≥ threshold over the rare-shingle
     universe (DF ≤ ``max_shingle_df``). Output: (id_a, id_b, jaccard)
     with id_a < id_b, jaccard rounded to 4.
 
-    Without a candidate set this is the all-pairs CORRECTNESS BASELINE
-    — quadratic in shared-shingle pairs — and it refuses corpora above
-    ``max_docs`` (see ``ALL_PAIRS_MAX_DOCS``): ``minhash_lsh_pairs`` is
-    the plan to run at scale. The guard does not apply on the LSH
-    verify path (``_candidates`` given), which is linear in candidates.
-    From ``prefix_min_docs`` docs up, candidate pairs are generated by
-    the exact Bayardo prefix filter instead of the flat self-join
-    (identical output, ~2× at 5·10^4 docs — see
+    This is the all-pairs CORRECTNESS BASELINE — quadratic in
+    shared-shingle pairs — and it refuses corpora above ``max_docs``
+    (see ``ALL_PAIRS_MAX_DOCS``): ``minhash_lsh_pairs`` is the plan to
+    run at scale. From ``prefix_min_docs`` docs up, candidate pairs are
+    generated by the exact Bayardo prefix filter instead of the flat
+    self-join (identical output, ~2× at 5·10^4 docs — see
     ``PREFIX_FILTER_MIN_DOCS``); pass ``prefix_min_docs=0`` to force
     that plan on a small corpus (tests do).
 
@@ -420,52 +444,20 @@ def ngram_jaccard_pairs(
     self-join (the same skew class the salted-host repartition handles
     for hosts). Sizes are computed AFTER the cap so Jaccard's
     numerator and denominator use the same shingle universe.
-
-    ``_shingles`` hands in a pre-built (and pre-capped, pre-persisted)
-    shingle relation — the caller then owns both the universe and the
-    persist lifecycle. ``_candidates`` (id_a, id_b) restricts the pair
-    computation to a candidate set (the LSH verify path) —
-    shared-shingle counting then touches only candidate docs instead
-    of the full self-join.
     """
-    n_docs: int | None = None
-    if _candidates is None:
-        n_docs = _guard_all_pairs(
-            docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
-        )
-        if n_docs is None and prefix_min_docs > 0:
-            # max_docs=None skips the guard probe, but the plan choice
-            # still needs the doc count — without it the prefix plan
-            # would never activate on the corpora that need it most
-            n_docs = docs.limit(prefix_min_docs + 1).count()
-    if _shingles is not None:
-        sh = _shingles
-    else:
-        # The explode feeds three consumers (sizes + both join sides):
-        # materialize it once instead of re-running split/explode per use.
-        sh = persist(
-            _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
-        )
-    if _candidates is not None:
-        # Candidate verify via per-doc shingle ARRAYS + array_intersect
-        # instead of the exploded (pair, shingle) match join: the old
-        # shape shuffled |candidates|·|shingles per doc| intermediate
-        # rows through a second join and a pair group-by; this shape
-        # aggregates the shingle relation ONCE to (id, sorted set,
-        # size) and probes it twice by id (AQE skew-splittable — a hot
-        # doc in many candidate pairs is a join key, not a window).
-        # Identical output: sh is distinct per (doc, shingle), so
-        # |array_intersect| = the old shared count; a pair with zero
-        # shared shingles (previously dropped by the inner match join)
-        # now carries jaccard 0 and drops at the threshold filter
-        # (every caller's threshold is > 0 — the registry pins 0.4/0.8).
-        # Array rows are doc-length-bounded — the granule/boilerplate
-        # collect_list precedent.
-        arrays = sh.groupBy(id_col).agg(
-            F.collect_list("shingle").alias("_shs"),
-            F.count("*").alias("n_shingles"),
-        )
-        return _verify_pairs_by_arrays(_candidates, arrays, id_col, threshold)
+    n_docs = _guard_all_pairs(
+        docs, max_docs, "ngram_jaccard_pairs", "minhash_lsh_pairs"
+    )
+    if n_docs is None and prefix_min_docs > 0:
+        # max_docs=None skips the guard probe, but the plan choice
+        # still needs the doc count — without it the prefix plan
+        # would never activate on the corpora that need it most
+        n_docs = docs.limit(prefix_min_docs + 1).count()
+    # The explode feeds three consumers (sizes + both join sides):
+    # materialize it once instead of re-running split/explode per use.
+    sh = persist(
+        _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
+    )
     if prefix_min_docs <= 0 or (n_docs is not None and n_docs >= prefix_min_docs):
         # Exact prefix-filtered all-pairs (Bayardo et al., WWW'07;
         # see PREFIX_FILTER_MIN_DOCS for the crossover measurement).
@@ -571,24 +563,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 12,
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    _shingles: DataFrame | None = None,
-) -> DataFrame:
-    """k-permutation MinHash signature per doc over the rare-shingle
-    universe (see ``ngram_jaccard_pairs``). Permutation i is
+def minhash_signatures(sh: DataFrame, id_col: str = "doc_id", k: int = 12) -> DataFrame:
+    """k-permutation MinHash signature per doc over the caller's
+    (id, shingle) relation ``sh`` — the rare-shingle universe (see
+    ``ngram_jaccard_pairs``). Permutation i is
     ``min(md5(i || ':' || shingle))`` — md5 exists verbatim in DuckDB,
     making the whole signature oracle-checkable. Output: (id, h0..h{k-1})."""
-    sh = (
-        _shingles
-        if _shingles is not None
-        else _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
-    )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
         for i in range(k)
@@ -648,7 +628,7 @@ def minhash_lsh_pairs(
     sh = persist(
         _df_capped(_word_shingles(docs, id_col, text_col, n), max_shingle_df)
     )
-    sig = minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
+    sig = minhash_signatures(sh, id_col, k)
     stacked = band_buckets(sig, id_col, k, bands)
     a = stacked.alias("a")
     b = stacked.alias("b")
@@ -663,10 +643,7 @@ def minhash_lsh_pairs(
     # Verify ONLY the candidate pairs (reusing the materialized shingle
     # relation) — never the all-pairs product; this is the whole point
     # of LSH at 10^12-doc scale.
-    return ngram_jaccard_pairs(
-        docs, id_col, text_col, n, threshold,
-        _shingles=sh, _candidates=candidates,
-    ).select("id_a", "id_b", "jaccard")
+    return verify_candidate_pairs(sh, candidates, id_col, threshold)
 
 
 def neardup_clusters(

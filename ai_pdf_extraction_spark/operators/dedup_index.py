@@ -82,7 +82,7 @@ from ai_pdf_extraction_spark.operators.dedup import (
     band_buckets,
     hot_shingle_set,
     minhash_signatures,
-    ngram_jaccard_pairs,
+    verify_candidate_pairs,
 )
 from ai_pdf_extraction_spark.operators.text_analysis import fingerprint
 from ai_pdf_extraction_spark.persist import persist
@@ -166,7 +166,7 @@ def index_signatures(
         else _word_shingles(docs, id_col, text_col, n)
     )
     sh = _frozen_capped(raw, hot)
-    return minhash_signatures(docs, id_col, text_col, n, k, _shingles=sh)
+    return minhash_signatures(sh, id_col, k)
 
 
 def live_index_relations(
@@ -281,7 +281,7 @@ def minhash_lsh_delta(
     new_sh = persist(
         _frozen_capped(_word_shingles(new_docs, id_col, text_col, n), hot),
     )
-    new_sig = minhash_signatures(new_docs, id_col, text_col, n, k, _shingles=new_sh)
+    new_sig = minhash_signatures(new_sh, id_col, k)
     new_b = persist(band_buckets(new_sig, id_col, k, bands))
     old_b = band_buckets(index_sigs, id_col, k, bands)
 
@@ -323,18 +323,10 @@ def minhash_lsh_delta(
     old_cand_sh = _frozen_capped(
         _word_shingles(old_cand, id_col, text_col, n), hot
     )
-    # three consumers inside ngram_jaccard_pairs; unpersisted, the old
-    # half re-runs the semi-join + explode + frozen cap per consumer
+    # the verify's two id probes each aggregate it; unpersisted, the old
+    # half re-runs the semi-join + explode + frozen cap per probe
     verify_sh = persist(new_sh.unionByName(old_cand_sh))
-    return ngram_jaccard_pairs(
-        new_docs,  # unused (shingles handed in); keeps the signature
-        id_col,
-        text_col,
-        n,
-        threshold,
-        _shingles=verify_sh,
-        _candidates=candidates,
-    )
+    return verify_candidate_pairs(verify_sh, candidates, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------

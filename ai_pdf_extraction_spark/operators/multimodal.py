@@ -938,26 +938,14 @@ def generate_media_rows(n: int, seed: int = 21) -> list[tuple[int, bytes]]:
     return rows
 
 
-def _atomic_write_table(path: str, table) -> None:
-    """Temp+rename parquet write: a concurrent oracle run must never
-    see a partially-written fixture (single definition — the writers
-    below share it)."""
+def write_media_fixtures(out_dir: str, rows: list[tuple[int, bytes]]) -> None:
+    """Write the media parquet AND its single-process probe golden as
+    ``media.parquet`` and ``golden.parquet`` in a new ``out_dir`` (pure
+    pyarrow — callable from oracle_sql)."""
     import os
-    import uuid
 
-    import pyarrow.parquet as pq
-
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-
-
-def write_media_fixtures(
-    media_path: str, golden_path: str, rows: list[tuple[int, bytes]]
-) -> None:
-    """Write the media parquet AND its single-process probe golden
-    (atomic temp+rename, pure pyarrow — callable from oracle_sql)."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     media = pa.table(
         {
@@ -977,14 +965,16 @@ def write_media_fixtures(
             "duration_ms": pa.array([m["duration_ms"] for m in metas], pa.int64()),
         }
     )
-    for path, table in ((media_path, media), (golden_path, golden)):
-        _atomic_write_table(path, table)
+    os.mkdir(out_dir)
+    pq.write_table(media, os.path.join(out_dir, "media.parquet"))
+    pq.write_table(golden, os.path.join(out_dir, "golden.parquet"))
 
 
 def write_decode_golden(path: str, rows: list[tuple[int, bytes]]) -> None:
-    """Single-process decode golden for q53 (atomic, pure pyarrow):
-    one :func:`decode_payload_summary` row per media row."""
+    """Single-process decode golden for q53 (pure pyarrow): one
+    :func:`decode_payload_summary` row per media row."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     summaries = [decode_payload_summary(b) for _, b in rows]
     table = pa.table(
@@ -1004,4 +994,4 @@ def write_decode_golden(path: str, rows: list[tuple[int, bytes]]) -> None:
             ),
         }
     )
-    _atomic_write_table(path, table)
+    pq.write_table(table, path)

@@ -218,4 +218,8 @@ def _ship_package(spark: SparkSession) -> None:
     )
     if not os.path.exists(zip_path):
         make_package_zip(zip_path, pkg_dir)
-    spark.sparkContext.addPyFile(zip_path)
+    sc = spark.sparkContext
+    # every queries() entry ships: adding the same zip again would only
+    # log a warning and grow sys.path and the include list per call
+    if os.path.basename(zip_path) not in (sc._python_includes or []):
+        sc.addPyFile(zip_path)

@@ -354,7 +354,7 @@ def read_warc_stream(
 
 
 # Bump when write_warc's record envelope changes: fixture caches
-# (e.g. __spark_entry__._ensure_warc_fixtures) key on this so a format
+# (e.g. __spark_entry__._warc_shards) key on this so a format
 # change can never silently reuse a stale on-disk shard.
 WARC_FORMAT_VERSION = 1
 

@@ -1910,9 +1910,13 @@ def test_all_pairs_guard_refuses_large_corpora(spark, docs):
     import pytest
 
     from ai_pdf_extraction_spark.operators.dedup import (
+        DEFAULT_MAX_SHINGLE_DF,
+        _df_capped,
+        _word_shingles,
         embedding_near_dup_pairs,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
+        verify_candidate_pairs,
     )
 
     with pytest.raises(ValueError, match="minhash_lsh_pairs"):
@@ -1929,12 +1933,13 @@ def test_all_pairs_guard_refuses_large_corpora(spark, docs):
     assert embedding_near_dup_pairs(emb, threshold=0.999, max_docs=None).count() == 0
 
     # candidate-restricted verify (the LSH path) is linear in
-    # candidates, not all-pairs — the guard must not fire even at
-    # max_docs=0 when _candidates is given
+    # candidates, not all-pairs — no guard fires there, even on a
+    # corpus the baseline refuses at max_docs=0
+    with pytest.raises(ValueError, match="max_docs=0"):
+        ngram_jaccard_pairs(docs, threshold=0.5, max_docs=0)
+    sh = _df_capped(_word_shingles(docs, "doc_id", "text", 3), DEFAULT_MAX_SHINGLE_DF)
     cands = spark.createDataFrame([(1, 4)], "id_a long, id_b long")
-    verified = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_docs=0, _candidates=cands
-    ).collect()
+    verified = verify_candidate_pairs(sh, cands, "doc_id", 0.5).collect()
     assert {(r["id_a"], r["id_b"]) for r in verified} == {(1, 4)}
     # ... and the composed LSH operator (which routes through that
     # path) still runs on a corpus the baseline would refuse

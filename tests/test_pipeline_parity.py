@@ -399,38 +399,28 @@ def test_curated_corpus_v5_lm_leg(spark):
     """V5 = V4 ∩ {head, middle}: survivors are exactly V4's docs whose
     standalone lm_perplexity bucket is head/middle, each carrying the
     SAME bucket the standalone operator assigns — the LM leg composes,
-    it does not recompute differently."""
+    it does not recompute differently. Runs on the contract documents
+    (text the committed LM splits across buckets) plus planted
+    gibberish rows."""
     from ai_pdf_extraction_spark.operators.lm import lm_perplexity
     from ai_pdf_extraction_spark.plans.curate import V4, V5, curated_corpus
 
-    docs = spark.createDataFrame(
+    contract = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    # gibberish docs: all-OOV tokens score at the oov floor -> tail
+    gibberish = spark.createDataFrame(
         [
-            (
-                i,
-                "en",
-                f"the unique body of document {i} with several plain filler "
-                "words to pass the quality gate",
-            )
-            for i in range(20)
-        ]
-        # gibberish docs: all-OOV tokens score at the oov floor -> tail
-        + [
-            (100 + i, "en", f"zzqx{i} vvrk qqpl mmwt bbgh nnjd kkfs xxcv "
+            (10**6 + i, "en", f"zzqx{i} vvrk qqpl mmwt bbgh nnjd kkfs xxcv "
              "zzqa vvrb qqpc mmwd bbge nnjf kkfg xxch")
             for i in range(4)
         ],
         "doc_id long, lang string, text string",
     )
-    bench = spark.createDataFrame(
-        [(999, "entirely unrelated benchmark text nothing shared")],
-        "bench_id long, text string",
+    docs = contract.select("doc_id", "lang", "text").unionByName(gibberish)
+    bench = contract.filter(F.col("doc_id") % 50 == 0).select(
+        F.col("doc_id").alias("bench_id"), "text"
     )
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7), 1.0, 0.5, 2.0]) for i in range(24)],
-        "vec_id long, embedding array<float>",
-    )
-    kw = dict(contamination_n=13, cos_threshold=0.999, n_planes=4, dim=4,
-              quality_threshold=0.0)
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    kw = dict(contamination_n=3, cos_threshold=0.45, quality_threshold=0.0)
     v4_ids = {
         r["doc_id"]
         for r in curated_corpus(docs, V4, bench, emb, **kw).collect()
@@ -446,8 +436,9 @@ def test_curated_corpus_v5_lm_leg(spark):
         i: b for i, b in standalone.items()
         if i in v4_ids and b in ("head", "middle")
     }
+    assert expect
     assert v5 == expect
     # the LM leg actually filtered something: the planted gibberish
     # docs survive v4 (unique text, fine quality) but score tail
     dropped = v4_ids - set(v5)
-    assert any(i >= 100 for i in dropped), (v4_ids, v5, standalone)
+    assert any(i >= 10**6 for i in dropped), (v4_ids, v5, standalone)

@@ -526,10 +526,21 @@ def test_release_unpersists_everything(spark):
     assert jsc.getPersistentRDDs().size() == 0
 
 
+def _swap_in_half(table: str) -> None:
+    """Rewrite a parquet table at the same path with its first half."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(table)
+    pq.write_table(t.slice(0, t.num_rows // 2), table)
+
+
 def test_contract_goldens_keyed_by_content(tmp_path, monkeypatch):
-    """The golden-parquet oracles are keyed by the documents table's
-    content, not its mtime: a byte copy of the sf dir (fresh mtimes)
-    resolves to the same oracle SQL."""
+    """Every ``/tmp`` fixture an oracle reads is keyed by content, not
+    by path or mtime: a byte copy of the sf dir (fresh mtimes) resolves
+    to the same oracle SQL, every fixture path follows the one naming
+    rule, and a documents table rewritten at the same path resolves to
+    fresh goldens."""
+    import re
     import shutil
 
     import __spark_entry__ as e
@@ -538,12 +549,47 @@ def test_contract_goldens_keyed_by_content(tmp_path, monkeypatch):
     shutil.copytree(SF_DIR, copy, copy_function=shutil.copyfile)
     src = os.path.join(SF_DIR, "documents.parquet")
     assert os.stat(copy / "documents.parquet").st_mtime_ns != os.stat(src).st_mtime_ns
-    golden = ("q23_simhash_sketch", "q68_bpe_token_counts", "q69_lang_trained",
-              "q72_token_budget_bpe", "q74_sequence_pack")
-    sql = {}
-    for d in (SF_DIR, str(copy)):
-        monkeypatch.setenv("SPARK_GRAFT_CONTRACT_SF", d)
-        oracles = e.oracle_sql()
-        sql[d] = {q: oracles[q] for q in golden}
-    assert sql[SF_DIR] == sql[str(copy)]
-    assert all("_golden_" in sql[SF_DIR][q] for q in golden)
+
+    def fixture_sql(sf_dir: str) -> dict[str, str]:
+        monkeypatch.setenv("SPARK_GRAFT_CONTRACT_SF", sf_dir)
+        return {q: s for q, s in e.oracle_sql().items() if "/tmp/spark_graft_" in s}
+
+    sql = fixture_sql(SF_DIR)
+    assert sql == fixture_sql(str(copy))
+    contract = {"q23_simhash_sketch", "q68_bpe_token_counts", "q69_lang_trained",
+                "q72_token_budget_bpe", "q74_sequence_pack"}
+    assert contract | {"q34_extract_pages", "q46_table_rows", "q49_media_metadata",
+                       "q53_media_decode", "q76_lm_perplexity"} <= set(sql)
+    paths = {p for s in sql.values() for p in re.findall(r"/tmp/spark_graft_[^']*", s)}
+    rule = r"/tmp/spark_graft_[a-z0-9_]+_[0-9a-f]{12}(/[a-z]+\.parquet)?"
+    assert all(re.fullmatch(rule, p) for p in paths), paths
+    _swap_in_half(str(copy / "documents.parquet"))
+    swapped = fixture_sql(str(copy))
+    assert all(swapped[q] != sql[q] for q in contract)
+
+
+def test_embedding_fixtures_follow_same_path_swap(spark, tmp_path):
+    """Trained quantizers and at-rest PQ codes follow the embeddings
+    table's content: a table rewritten at the same path gets the
+    answer a fresh copy of it gets, not the first table's cached one."""
+    import shutil
+
+    import __spark_entry__ as e
+
+    sf, fresh = tmp_path / "sf", tmp_path / "fresh"
+    sf.mkdir()
+    fresh.mkdir()
+    shutil.copyfile(os.path.join(SF_DIR, "embeddings.parquet"), sf / "embeddings.parquet")
+
+    def fixtures(d):
+        codes = [spark.read.parquet(e._ensure_pq_codes(spark, str(d), residual=r))
+                 .orderBy("vec_id").collect() for r in (False, True)]
+        return e._ivf_centroids(str(d)), e._pq_codebooks(str(d)), codes
+
+    first = fixtures(sf)
+    _swap_in_half(str(sf / "embeddings.parquet"))
+    shutil.copyfile(sf / "embeddings.parquet", fresh / "embeddings.parquet")
+    after = fixtures(sf)
+    assert after == fixtures(fresh)
+    assert after[0] != first[0] and after[1] != first[1]
+    assert [len(c) for c in after[2]] == [len(c) // 2 for c in first[2]]
